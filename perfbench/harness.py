@@ -42,8 +42,11 @@ def prepare_env() -> None:
     # Python workers import the package from the checkout
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
-    java_opts = (f"-Djava.io.tmpdir={tmp} -Xms{DRIVER_MEMORY} "
-                 f"-XX:+AlwaysPreTouch")
+    # every JVM, spark-submit's launcher included: temp files in the
+    # checkout, and no perf-data file in the system temp dir
+    os.environ["JAVA_TOOL_OPTIONS"] = (f"-Djava.io.tmpdir={tmp} "
+                                       f"-XX:-UsePerfData")
+    java_opts = f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch"
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(shlex.quote(a) for a in [
         "--conf", "spark.ui.showConsoleProgress=false",
         "--conf", f"spark.local.dir={tmp}",
