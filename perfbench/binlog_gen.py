@@ -1,24 +1,48 @@
 """Seeded binlog corpus for the sync workloads.
 
 One corpus is a directory of MySQL binlog v4 files written through the
-package's own encoder (`sources.binlog_writer`). Every event is a
-single-row autocommit transaction: a TABLE_MAP, one WRITE/UPDATE/DELETE
-rows event, then an XID -- the shape an OLTP primary logs. Keys are
-skewed (a few hot rows take most updates), and three tables are
+package's own encoder (`sources.binlog_writer`). Three tables are
 interleaved:
 
 - `shop.orders`    ruled, with a field rename (status -> order_status)
 - `shop.customers` ruled, no rename
-- `shop.audit`     no rule matches it, so every drain must skip it
+- `shop.audit`     sysbench's sbtest shape; no rule matches it, so every
+                   drain must decode and skip it
+
+The traffic follows two published workloads rather than invented ratios:
+
+- A fresh history starts with a load of every table, ids 1..KEYSPACE,
+  in multi-row inserts (sysbench's `prepare`).
+- Then transactions in the shape of sysbench 1.0's `oltp_write_only`,
+  with the defaults of its `oltp_common.lua` (`index_updates=1`,
+  `non_index_updates=1`, `delete_inserts=1`). One transaction is an
+  UPDATE of the indexed column (`k = k + 1`), an UPDATE of the
+  non-indexed column (`c = <new text>`), then a DELETE of one id
+  followed by an INSERT of the same id with new values, committed
+  under one XID. So a transaction logs four single-row events: 50%
+  updates, 25% deletes, 25% inserts.
+- Each statement group picks its table uniformly, as sysbench does
+  with `--tables`.
+- Each one picks its id from a Zipfian over 1..KEYSPACE with YCSB's
+  default constant 0.99 (`ZipfianGenerator.ZIPFIAN_CONSTANT`; Cooper et
+  al., "Benchmarking Cloud Serving Systems with YCSB", SoCC 2010). Rank
+  r is id r, unscrambled. sysbench's own default id choice is uniform;
+  the skew is taken from YCSB so that hot rows pile up versions for
+  dedup-on-read to collapse.
+
+KEYSPACE (the table sizes) is a budget choice, not taken from either
+source.
 
 Besides the bytes, the generator returns what a correct drain must
 produce: the final state per table (a replay of the events in log
-order) and the exact insert/update/delete counts per table. Both come
-from the generator's own bookkeeping, never from the program.
+order) and the exact insert/update/delete row counts per table. Both
+come from the generator's own bookkeeping, never from the program.
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import os
 import random
 from dataclasses import dataclass, field
@@ -39,15 +63,18 @@ TABLES = {
                   BinlogColumn.bigint("tier"),
                   BinlogColumn.double("balance")],
     "audit": [BinlogColumn.bigint("id"),
-              BinlogColumn.varchar("msg", 64)],
+              BinlogColumn.bigint("k"),
+              BinlogColumn.varchar("c", 120),
+              BinlogColumn.varchar("pad", 60)],
 }
 TABLE_IDS = {"orders": 101, "customers": 102, "audit": 103}
-# share of events per table; audit has no rule, so its events are pure
-# decode work that projection must throw away
-TABLE_WEIGHTS = (("orders", 0.55), ("customers", 0.30), ("audit", 0.15))
-# keyspace per table; skew comes from drawing u**SKEW over it
-KEYSPACE = {"orders": 4000, "customers": 1500, "audit": 6000}
-SKEW = 3.0
+# per table, the column sysbench's index update increments (its `k`)
+# and the one its non-index update rewrites (its `c`)
+K_COL = {"orders": 1, "customers": 2, "audit": 1}
+C_COL = {"orders": 4, "customers": 1, "audit": 2}
+KEYSPACE = {"orders": 500, "customers": 250, "audit": 250}
+ZIPF_THETA = 0.99
+PREPARE_BATCH = 100
 
 RIVER_TOML = f"""
 [[rule]]
@@ -76,6 +103,10 @@ RULED = ("orders", "customers")
 _STATUSES = ("new", "paid", "shipped", "returned", "void")
 _WORDS = ("alpha", "bravo", "delta", "echo", "kilo", "lima", "oscar",
           "sierra", "tango", "zulu")
+# cumulative Zipfian weights per table: P(rank r) ~ 1 / r**ZIPF_THETA
+_ZIPF_CDF = {t: list(itertools.accumulate(
+    1.0 / r ** ZIPF_THETA for r in range(1, n + 1)))
+    for t, n in KEYSPACE.items()}
 
 
 @dataclass
@@ -88,7 +119,7 @@ class Corpus:
         default_factory=lambda: {t: {"insert": 0, "update": 0,
                                      "delete": 0} for t in TABLES})
     files: list[str] = field(default_factory=list)
-    events: int = 0
+    xids: int = 0
 
     def ruled_rows(self) -> int:
         """Row events a drain applies (rule-matched tables only)."""
@@ -98,28 +129,35 @@ class Corpus:
         """A corpus that continues this one's history with its own op
         counts and file list: pass it to `write_corpus` for a delta."""
         return Corpus(state={t: dict(r) for t, r in self.state.items()},
-                      events=self.events)
+                      xids=self.xids)
+
+
+def _text(rng: random.Random, lo: int, hi: int) -> str:
+    return " ".join(rng.choice(_WORDS) for _ in range(rng.randint(lo, hi)))
 
 
 def _row(rng: random.Random, table: str, key: int) -> list:
     if table == "orders":
         return [key, rng.randrange(1, KEYSPACE["customers"] + 1),
                 round(rng.uniform(1, 5000), 2), rng.choice(_STATUSES),
-                " ".join(rng.choice(_WORDS)
-                         for _ in range(rng.randrange(1, 6)))]
+                _text(rng, 1, 5)]
     if table == "customers":
         return [key, f"cust-{key}-{rng.randrange(10**6)}",
                 rng.randrange(0, 5), round(rng.uniform(-100, 9000), 2)]
-    return [key, f"audit {rng.choice(_WORDS)} {rng.randrange(10**9)}"]
+    return [key, rng.randrange(1, KEYSPACE["audit"] + 1),
+            _text(rng, 10, 18)[:120], _text(rng, 5, 8)[:60]]
 
 
-def _pick_table(rng: random.Random) -> str:
-    u, acc = rng.random(), 0.0
-    for name, w in TABLE_WEIGHTS:
-        acc += w
-        if u < acc:
-            return name
-    return TABLE_WEIGHTS[-1][0]
+def _new_c(rng: random.Random, table: str, key: int) -> str:
+    """A fresh value for the table's non-indexed column."""
+    return _row(rng, table, key)[C_COL[table]]
+
+
+def _pick(rng: random.Random) -> tuple[str, int]:
+    table = rng.choice(tuple(TABLES))
+    cdf = _ZIPF_CDF[table]
+    rank = bisect.bisect_right(cdf, rng.random() * cdf[-1])
+    return table, min(rank, len(cdf) - 1) + 1
 
 
 class _Writer(BinlogFileWriter):
@@ -136,45 +174,71 @@ class _Writer(BinlogFileWriter):
         self._table_map()
 
 
+def _prepare(w: _Writer, rng: random.Random, c: Corpus) -> None:
+    """sysbench `prepare`: load ids 1..KEYSPACE of every table in
+    multi-row inserts, one transaction per batch."""
+    for table, n in KEYSPACE.items():
+        for lo in range(1, n + 1, PREPARE_BATCH):
+            rows = [_row(rng, table, k)
+                    for k in range(lo, min(lo + PREPARE_BATCH, n + 1))]
+            w.use(table)
+            w.insert(rows)
+            c.xids += 1
+            w.xid(c.xids)
+            for r in rows:
+                c.state[table][r[0]] = tuple(r)
+            c.counts[table]["insert"] += len(rows)
+
+
+def _update(w: _Writer, c: Corpus, table: str, key: int, col: int,
+            value) -> None:
+    old = c.state[table][key]
+    new = list(old)
+    new[col] = value
+    w.use(table)
+    w.update([(list(old), new)])
+    c.state[table][key] = tuple(new)
+    c.counts[table]["update"] += 1
+
+
+def _transaction(w: _Writer, rng: random.Random, c: Corpus) -> None:
+    """One sysbench oltp_write_only transaction: index update,
+    non-index update, delete + insert of the same id."""
+    table, key = _pick(rng)                     # SET k = k + 1
+    k = K_COL[table]
+    _update(w, c, table, key, k, c.state[table][key][k] + 1)
+    table, key = _pick(rng)                     # SET c = ?
+    _update(w, c, table, key, C_COL[table], _new_c(rng, table, key))
+    table, key = _pick(rng)                     # DELETE + INSERT
+    w.use(table)
+    w.delete([list(c.state[table][key])])
+    new = _row(rng, table, key)
+    w.insert([new])
+    c.state[table][key] = tuple(new)
+    c.counts[table]["delete"] += 1
+    c.counts[table]["insert"] += 1
+    c.xids += 1
+    w.xid(c.xids)
+
+
 def write_corpus(out_dir: str, seed: int, *, n_files: int,
-                 events_per_file: int, first_index: int = 1,
+                 txns_per_file: int, first_index: int = 1,
                  corpus: Corpus | None = None) -> Corpus:
-    """Write `n_files` binlog files of `events_per_file` single-row
-    events each into `out_dir`, named mysql-bin.NNNNNN from
-    `first_index`. Passing the `corpus` of an earlier call continues
-    its history (a delta on top of it): ops stay valid against the
-    state that history left."""
+    """Write `n_files` binlog files of `txns_per_file` transactions each
+    into `out_dir`, named mysql-bin.NNNNNN from `first_index`. Without a
+    `corpus` this is a fresh history, and its first file opens with the
+    `prepare` load. Passing the `corpus` of an earlier call continues
+    its history (a delta on top of it)."""
     rng = random.Random(seed)
     c = corpus if corpus is not None else Corpus()
     os.makedirs(out_dir, exist_ok=True)
-    xid = 1 + c.events
     for i in range(n_files):
         idx = first_index + i
         w = _Writer(base_ts=1_700_000_000 + idx * 60)
-        for _ in range(events_per_file):
-            table = _pick_table(rng)
-            key = 1 + int(KEYSPACE[table] * rng.random() ** SKEW)
-            rows = c.state[table]
-            w.use(table)
-            if key not in rows:
-                new = _row(rng, table, key)
-                w.insert([new])
-                op = "insert"
-            elif rng.random() < 0.75:
-                new = _row(rng, table, key)
-                w.update([(list(rows[key]), new)])
-                op = "update"
-            else:
-                w.delete([list(rows[key])])
-                new, op = None, "delete"
-            w.xid(xid)
-            xid += 1
-            if new is None:
-                del rows[key]
-            else:
-                rows[key] = tuple(new)
-            c.counts[table][op] += 1
-            c.events += 1
+        if corpus is None and i == 0:
+            _prepare(w, rng, c)
+        for _ in range(txns_per_file):
+            _transaction(w, rng, c)
         path = os.path.join(out_dir, f"mysql-bin.{idx:06d}")
         with open(path, "wb") as f:
             f.write(w.to_bytes())

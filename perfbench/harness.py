@@ -43,9 +43,12 @@ def prepare_env() -> None:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     # every JVM, spark-submit's launcher included: temp files in the
-    # checkout, and no perf-data file in the system temp dir
-    os.environ["JAVA_TOOL_OPTIONS"] = (f"-Djava.io.tmpdir={tmp} "
-                                       f"-XX:-UsePerfData")
+    # checkout, no perf-data file in the system temp dir, and JIT
+    # compiler threads that live as long as the JVM, so that
+    # `jit_cpu_seconds` loses none of their time to a thread's exit
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+        f"-XX:-UseDynamicNumberOfCompilerThreads")
     java_opts = f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch"
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(shlex.quote(a) for a in [
         "--conf", "spark.ui.showConsoleProgress=false",
@@ -58,14 +61,21 @@ def prepare_env() -> None:
 
 
 def start_spark():
-    """The program's own session factory, timed through the first job
-    (`session.start_s`)."""
+    """The program's own session factory, through the first job.
+    Returns the session, its wall seconds (`session.start_s`), the CPU
+    seconds it cost this process and the JVM tree less the driver
+    JVM's JIT compiler threads (spark-submit's launcher JVM is
+    included: it is a reaped child of the final JVM), and the JIT
+    compiler threads' CPU seconds."""
     from mysql_syncer_clickhouse_spark.session import get_spark
-    t0 = time.perf_counter()
+    c0, t0 = sum(os.times()[:4]), time.perf_counter()
     spark = get_spark("perfbench", cpus=SLOTS)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
-    return spark, time.perf_counter() - t0
+    wall = time.perf_counter() - t0
+    pid = jvm_pid()
+    jit = jit_cpu_seconds(pid)
+    return spark, wall, tree_cpu_seconds(pid) - c0 - jit, jit
 
 
 def stop_spark(spark) -> None:
@@ -193,6 +203,25 @@ def tree_cpu_seconds(root_pid: int) -> float:
         except OSError:
             continue
         total += sum(int(x) for x in fields[11:15]) / tick
+    return total
+
+
+def jit_cpu_seconds(jvm_pid: int) -> float:
+    """CPU seconds (user + system) of the JVM's JIT compiler threads
+    so far."""
+    tick = os.sysconf("SC_CLK_TCK")
+    task = f"/proc/{jvm_pid}/task"
+    total = 0.0
+    for t in os.listdir(task):
+        try:
+            with open(f"{task}/{t}/comm") as f:
+                if "CompilerThre" not in f.read():
+                    continue
+            with open(f"{task}/{t}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        total += (int(fields[11]) + int(fields[12])) / tick
     return total
 
 

@@ -5,8 +5,10 @@
 Generates the workload's inputs from the seed inside perfbench/.work,
 starts Spark through the package's own session factory, runs the
 workload (set-up, warm-up, then timed iterations for S seconds with a
-minimum iteration count), checks every output, and prints as its last
-stdout line one JSON object: correct, attempted, failed and metrics.
+minimum iteration count), checks its outputs (every drain and read of
+the sync workload; each analytics entry once, after the timed sweeps),
+and prints as its last stdout line one JSON object: correct, attempted,
+failed and metrics.
 With --trace 0 the metrics are the end-to-end ones; with --trace 1 the
 per-layer ones (and the spans go to perfbench/.traces/). The line
 before it is a report with the workload's own named figures.
@@ -57,13 +59,17 @@ def main(argv=None) -> int:
     try:
         from perfbench import workloads
         fn = workloads.WORKLOADS[args.workload]
-        spark, start_s = harness.start_spark()
+        spark, start_s, start_cpu_s, start_jit_s = harness.start_spark()
         sampler = harness.RssSampler(harness.jvm_pid()).start()
         tracer = harness.Tracer(spark, enabled=bool(args.trace))
         run = workloads.Run(spark, args.seed, args.seconds,
                             bool(args.trace), tracer)
         e2e = fn(run)
-        e2e["setup_s"] += start_s
+        e2e["setup_s"] += start_cpu_s
+        run.report["setup_wall_s"] = e2e.pop("setup_wall_s") + start_s
+        run.report["setup_jit_cpu_s"] = (e2e.pop("setup_jit_cpu_s")
+                                          + start_jit_s)
+        run.report["session_start_s"] = start_s
         e2e["peak_rss_mb"] = sampler.stop()
         run.report["peak_rss_parts_mb"] = sampler.peak_parts
         sampler = None

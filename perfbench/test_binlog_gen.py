@@ -8,12 +8,16 @@
 2. A tiny `run_binlog` drain into the file sink, read back through
    `current_state`, matches the expected state bucket by bucket under
    `operators.syncverify.bucket_digest`.
+3. The op mix is sysbench oltp_write_only's and the id choice is
+   YCSB's Zipfian (see binlog_gen).
 """
 
 from __future__ import annotations
 
+import collections
 import json
 import os
+import random
 import sys
 
 import pytest
@@ -48,23 +52,44 @@ def _replay(files):
 
 def test_replay_reproduces_expected_state(tmp_path):
     hist = G.write_corpus(str(tmp_path / "h"), 5, n_files=3,
-                          events_per_file=300)
+                          txns_per_file=75)
     delta = G.write_corpus(str(tmp_path / "d"), 6, n_files=2,
-                           events_per_file=100, first_index=4,
+                           txns_per_file=25, first_index=4,
                            corpus=hist.fork())
     state, counts = _replay(hist.files)
     assert state == hist.state and counts == hist.counts
     state, _ = _replay(hist.files + delta.files)
     assert state == delta.state
-    assert sum(sum(c.values()) for c in hist.counts.values()) == 900
+    loaded = sum(G.KEYSPACE.values())
+    assert sum(sum(c.values()) for c in hist.counts.values()) == (
+        loaded + 4 * 225)
     assert sum(sum(c.values()) for c in delta.counts.values()) == 200
-    assert hist.counts["orders"]["update"] > 0
-    assert hist.counts["customers"]["delete"] > 0
+    # sysbench oltp_write_only: 2 updates, 1 delete, 1 insert per txn
+    ops = {op: sum(c[op] for c in delta.counts.values())
+           for op in ("insert", "update", "delete")}
+    assert ops == {"insert": 50, "update": 100, "delete": 50}
+    # the load leaves every id live, and delete + insert keeps it so
+    for t, n in G.KEYSPACE.items():
+        assert sorted(delta.state[t]) == list(range(1, n + 1))
+
+
+def test_keys_are_zipfian():
+    """Tables are picked uniformly; within a table, id 1 (rank 1) takes
+    1 / zeta(n, theta) of the picks."""
+    rng = random.Random(3)
+    picks = collections.Counter(G._pick(rng) for _ in range(30000))
+    for t, n in G.KEYSPACE.items():
+        zeta = sum(1 / r ** G.ZIPF_THETA for r in range(1, n + 1))
+        share = picks[(t, 1)] / sum(v for (u, _), v in picks.items()
+                                    if u == t)
+        assert abs(share - 1 / zeta) < 0.02, (t, share, 1 / zeta)
+        assert abs(picks.total() / 3 - sum(
+            v for (u, _), v in picks.items() if u == t)) < 600
 
 
 def test_same_seed_same_bytes(tmp_path):
-    a = G.write_corpus(str(tmp_path / "a"), 9, n_files=2, events_per_file=50)
-    b = G.write_corpus(str(tmp_path / "b"), 9, n_files=2, events_per_file=50)
+    a = G.write_corpus(str(tmp_path / "a"), 9, n_files=2, txns_per_file=20)
+    b = G.write_corpus(str(tmp_path / "b"), 9, n_files=2, txns_per_file=20)
     for x, y in zip(a.files, b.files):
         assert open(x, "rb").read() == open(y, "rb").read()
     assert a.state == b.state
@@ -87,7 +112,7 @@ def test_drain_matches_expected_by_bucket_digest(spark, tmp_path):
         bucket_digest)
     from perfbench.workloads import _engine_cfg, _pipes
     corpus = G.write_corpus(str(tmp_path / "b"), 3, n_files=2,
-                            events_per_file=120)
+                            txns_per_file=30)
     cfg = _engine_cfg(str(tmp_path / "data"))
     out = run_binlog(cfg, str(tmp_path / "b"), spark=spark)
     assert {ln["rule"]: ln["ops"] for ln in out} == {

@@ -1,7 +1,7 @@
 """The benchmark's workloads. Each takes a Run, does its set-up, its
-untimed warm-up and its timed iterations, checks every output, and
-returns its end-to-end figures; in traced mode it also fills
-`run.layers` with the per-layer figures."""
+untimed warm-up and its timed iterations, checks its outputs into
+`run.check`, and returns its end-to-end figures; in traced mode it also
+fills `run.layers` with the per-layer figures."""
 
 from __future__ import annotations
 
@@ -11,13 +11,13 @@ import random
 import shutil
 import time
 import tomllib
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from . import binlog_gen as G
 from .harness import (SLOTS, WORK, ProgressLog, Tracer, flush_listeners,
-                      gc_barrier, jvm_gc_seconds, jvm_pid, median,
-                      percentile, stage_ledger, tree_cpu_seconds,
+                      gc_barrier, jit_cpu_seconds, jvm_gc_seconds, jvm_pid,
+                      median, percentile, stage_ledger, tree_cpu_seconds,
                       watermark)
 
 
@@ -44,20 +44,26 @@ class Run:
 
 class Meter:
     """Wall and CPU seconds summed over the timed parts of one
-    iteration. CPU is the user + system time of the Spark process tree
-    and this process, which a neighbour on a shared host barely moves."""
+    iteration. `cpu` is the user + system time of the Spark process
+    tree and this process, which a neighbour on a shared host barely
+    moves, less the driver JVM's JIT compiler threads; those are kept
+    apart in `jit`. JIT work fades as a JVM warms and is the noisiest
+    part of the total (see NOTES.md)."""
 
     def __init__(self, pid: int):
-        self.pid, self.wall, self.cpu = pid, 0.0, 0.0
+        self.pid, self.wall, self.cpu, self.jit = pid, 0.0, 0.0, 0.0
 
     @contextmanager
     def timing(self):
-        c0, t0 = tree_cpu_seconds(self.pid), time.perf_counter()
+        j0, c0 = jit_cpu_seconds(self.pid), tree_cpu_seconds(self.pid)
+        t0 = time.perf_counter()
         try:
             yield
         finally:
             self.wall += time.perf_counter() - t0
-            self.cpu += tree_cpu_seconds(self.pid) - c0
+            jit = jit_cpu_seconds(self.pid) - j0
+            self.jit += jit
+            self.cpu += tree_cpu_seconds(self.pid) - c0 - jit
 
 
 def _timed_loop(run: Run, body, min_iters: int) -> dict:
@@ -67,7 +73,7 @@ def _timed_loop(run: Run, body, min_iters: int) -> dict:
     wall and CPU seconds. In traced mode every other iteration runs
     untraced, so the traced median minus the untraced median is the
     tracing overhead."""
-    traced, plain, cpu = [], [], []
+    traced, plain, cpu, jit = [], [], [], []
     pid = jvm_pid()
     t_end = time.perf_counter() + run.seconds
     i = 0
@@ -80,6 +86,7 @@ def _timed_loop(run: Run, body, min_iters: int) -> dict:
         meter = Meter(pid)
         body(i, meter)
         cpu.append(meter.cpu)
+        jit.append(meter.jit)
         (traced if on else plain).append(meter.wall)
         if on:
             run.layers.setdefault("_gc", []).append(
@@ -89,16 +96,20 @@ def _timed_loop(run: Run, body, min_iters: int) -> dict:
     run.tracer.iteration = None
     run.report["iter_s"] = traced + plain
     run.report["iter_cpu_s"] = cpu
+    run.report["iter_jit_cpu_s"] = jit
     if run.trace:
         run.layers["trace.overhead_s"] = median(traced) - median(plain)
+        run.layers["jvm.jit_cpu_s"] = median(jit)
         run.layers["jvm.gc_s"] = median(run.layers.pop("_gc"))
     return {"job_s": median(plain or traced), "job_cpu_s": median(cpu)}
 
 
 # ------------------------------------------------------ sync_delta_read
 
-HIST_FILES, HIST_EVENTS = 4, 300
-DELTA_FILES, DELTA_EVENTS = 2, 100
+# history: the prepare load (1,000 rows) plus 4 x 40 transactions;
+# delta: 2 x 25 transactions (200 single-row events)
+HIST_FILES, HIST_TXNS = 4, 40
+DELTA_FILES, DELTA_TXNS = 2, 25
 TOPK = 10
 
 
@@ -190,18 +201,18 @@ def sync_delta_read(run: Run) -> dict:
     snap = os.path.join(WORK, "snap")
     delta_dir = os.path.join(WORK, "delta")
     hist = G.write_corpus(binlogs, run.seed, n_files=HIST_FILES,
-                          events_per_file=HIST_EVENTS)
+                          txns_per_file=HIST_TXNS)
     delta = G.write_corpus(delta_dir, run.seed + 1_000_003,
                            n_files=DELTA_FILES,
-                           events_per_file=DELTA_EVENTS,
+                           txns_per_file=DELTA_TXNS,
                            first_index=HIST_FILES + 1, corpus=hist.fork())
     delta_names = [os.path.basename(p) for p in delta.files]
     cfg = _engine_cfg(data)
     pipes = _pipes(cfg)
     progress = ProgressLog(spark) if run.trace else None
 
-    t_setup = time.perf_counter()
-    with tr.span("streaming.history_sync", "history"):
+    setup = Meter(jvm_pid())
+    with setup.timing(), tr.span("streaming.history_sync", "history"):
         out = run_binlog(cfg, binlogs, spark=spark)
     _check_drain(run, "history", out, hist)
     shutil.copytree(data, snap)
@@ -243,9 +254,9 @@ def sync_delta_read(run: Run) -> dict:
         reads(i, delta.state, meter)
 
     tr.enabled = False
-    iteration(-1, Meter(jvm_pid()))                 # warm-up
+    with setup.timing():
+        iteration(-1, Meter(jvm_pid()))             # warm-up
     tr.enabled = run.trace
-    setup_s = time.perf_counter() - t_setup
     job = _timed_loop(run, iteration, min_iters=3)
     all_reads = [x for v in lat.values() for x in v]
     if run.trace:
@@ -264,7 +275,8 @@ def sync_delta_read(run: Run) -> dict:
         "reads": len(all_reads), "drains": len(freshness),
         "delta_rows": delta.ruled_rows(),
         **job})
-    return {"setup_s": setup_s, "job_cpu_s": job["job_cpu_s"]}
+    return {"setup_s": setup.cpu, "setup_wall_s": setup.wall,
+            "setup_jit_cpu_s": setup.jit, "job_cpu_s": job["job_cpu_s"]}
 
 
 def _drain_layers(run: Run, lo: int, wall: float, progress, binlogs):
@@ -358,30 +370,39 @@ QUERY_FIELDS = ("construct_s", "execute_s", "jobs", "tasks", "cpu_s",
 
 
 def analytics(run: Run) -> dict:
+    """Set-up: one untimed warm-up sweep. Each timed sweep is, per
+    entry, `clearCache` + GC barrier, a fresh `fn()` construction and
+    its first `noop` execution. After the timed sweeps the frame each
+    entry built in the last sweep is collected once, untimed, and
+    compared with its registry DuckDB oracle by the package's own
+    `selfcheck` comparator; those comparisons are the run's checks."""
+    import duckdb
+
     from mysql_syncer_clickhouse_spark import queries as registry
-    from . import fixtures, oracle
+    from mysql_syncer_clickhouse_spark import selfcheck
+    from . import fixtures
     spark, tr = run.spark, run.tracer
     sf = fixtures.write_tables(os.path.join(WORK, "sf"), run.seed)
     fns, sql = registry.all_queries(), registry.all_oracle_sql()
-    con = oracle.duck(sf)
     per: dict[str, dict[str, list]] = {
         n: collections.defaultdict(list) for n in MIX}
+    last = {}
 
-    def entry(name: str, check: bool, meter: Meter | None = None) -> None:
+    def entry(name: str, meter: Meter) -> None:
         spark.catalog.clearCache()
         gc_barrier(spark)
-        timing = meter.timing if meter else nullcontext
         lo = watermark(spark) if tr.enabled else None
         t0 = time.perf_counter()
-        with timing(), tr.span(f"queries.{name}.construct",
-                               f"{name}:construct"):
+        with meter.timing(), tr.span(f"queries.{name}.construct",
+                                     f"{name}:construct"):
             df = fns[name](spark, sf)
         construct = time.perf_counter() - t0
         t1 = time.perf_counter()
-        with timing(), tr.span(f"queries.{name}.execute",
-                               f"{name}:execute"):
+        with meter.timing(), tr.span(f"queries.{name}.execute",
+                                     f"{name}:execute"):
             df.write.format("noop").mode("overwrite").save()
         execute = time.perf_counter() - t1
+        last[name] = df
         if tr.enabled:
             p = per[name]
             p["construct_s"].append(construct)
@@ -391,32 +412,39 @@ def analytics(run: Run) -> dict:
             p["tasks"].append(both["tasks"])
             p["cpu_s"].append(both["cpu_s"])
             p["shuffle_mb"].append(both["shuffle_bytes"] / 1e6)
-        if check:
-            got = [tuple(r) for r in df.collect()]
-            bad = oracle.mismatch(df.columns, got, con, sql[name])
-            run.check(f"{name} vs oracle", bad is None, bad)
 
-    t_setup = time.perf_counter()
+    setup = Meter(jvm_pid())
     tr.enabled = False
-    for name in MIX:                                # warm-up + checks
-        entry(name, check=True)
     for name in MIX:                                # fresh-JVM slope
-        entry(name, check=False)
+        entry(name, setup)
     tr.enabled = run.trace
-    setup_s = time.perf_counter() - t_setup
 
     def sweep(i: int, meter: Meter) -> None:
         for n in MIX:
-            entry(n, check=False, meter=meter)
-        run.attempted += len(MIX)
+            entry(n, meter)
 
     job = _timed_loop(run, sweep, min_iters=3)
+    con = duckdb.connect()
+    for t in selfcheck.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{sf}/{t}.parquet'")
+    for name in MIX:
+        df = last[name]
+        try:
+            r = selfcheck.compare_one(spark, con, lambda *_: df, sql[name],
+                                      sf)
+        except Exception as e:
+            r = {"err": f"{type(e).__name__}: {e}"}
+        run.check(f"{name} vs oracle",
+                  all(r.get(k) for k in ("schema_match", "rows_match",
+                                         "values_match")), r)
     if run.trace:
         for n in MIX:
             for f in QUERY_FIELDS:
                 run.layers[f"queries.{n}.{f}"] = median(per[n][f])
     run.report.update({"sweep_s": job["job_s"], "mix": list(MIX), **job})
-    return {"setup_s": setup_s, "job_cpu_s": job["job_cpu_s"]}
+    return {"setup_s": setup.cpu, "setup_wall_s": setup.wall,
+            "setup_jit_cpu_s": setup.jit, "job_cpu_s": job["job_cpu_s"]}
 
 
 WORKLOADS = {"sync_delta_read": sync_delta_read, "analytics": analytics}
