@@ -248,6 +248,18 @@ def _infer_row_ddl(env_batch, db: str, table: str) -> str | None:
     return row[0]["s"]
 
 
+def _binlog_tables(cfg: EngineConfig, env_batch) -> list | None:
+    """The (db, table) pairs present in the binlogs, for [[source]]
+    wildcard expansion (one full decode: a distinct over (db, table)).
+    None without [[source]] blocks: effective_rules ignores the list
+    then, so the decode would buy nothing."""
+    if not cfg.sources:
+        return None
+    return [(r["db"], r["table"]) for r in
+            env_batch.select("db", "table").distinct().collect()
+            if r["db"] and r["table"]]
+
+
 def run_binlog(cfg: EngineConfig, binlog_dir: str, *,
                follow: bool = False, compact: bool = False,
                follow_ddl: bool = False, ddl_stop=None,
@@ -256,10 +268,13 @@ def run_binlog(cfg: EngineConfig, binlog_dir: str, *,
     rules/apply path as the changelog mode -- the reference's own
     topology (main.go:25-106: one replication stream fanned out by
     [[rule]]s). sources/binlog.py decodes the v4 format (one file =
-    one task); each rule projects its table out of the shared envelope
-    stream, so N rules share ONE decode pass per micro-batch per
-    distinct source checkpoint. Exact-match rules only (a wildcard
-    rule needs live introspection to enumerate tables).
+    one task). Each rule runs its own stream under its own checkpoint
+    and decodes every new file itself, so N rules decode each new
+    file N times -- there is no shared decode pass. Each rule's row
+    schema is also sampled from a batch read of the retained files
+    (_infer_row_ddl). Wildcard tables need [[source]] blocks: they
+    expand against the (db, table) pairs of one more full decode,
+    which runs only when such blocks exist.
 
     `follow_ddl` (the --follow half of --apply-ddl): a daemon thread
     polls the directory for NEW schema-changing QUERY events at
@@ -309,12 +324,8 @@ def run_binlog(cfg: EngineConfig, binlog_dir: str, *,
         results.append({"mode": "apply_ddl_follow",
                         "cadence_ms": cfg.flush_bulk_ms})
     env_batch = read_binlog_files(spark, binlog_dir)
-    # [[source]] wildcard expansion against the tables actually
-    # present in the binlogs (bounded: one distinct over (db, table))
-    available = [(r["db"], r["table"]) for r in
-                 env_batch.select("db", "table").distinct().collect()
-                 if r["db"] and r["table"]]
-    for rule in cfg.effective_rules(available).rules:
+    for rule in cfg.effective_rules(
+            _binlog_tables(cfg, env_batch)).rules:
         if not rule.pk and cfg.skip_no_pk_table:
             continue
         ddl = _infer_row_ddl(env_batch, rule.source_schema,
@@ -735,13 +746,11 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
         sample = (m, int(rotation_state.get(str(m), 0)) % m)
     make_transport = transport_for(cfg, checksum_url, required=False)
     env_batch = None
-    available: list = []
+    available: list | None = []
     if binlog_dir:
         from .sources.binlog import read_binlog_files
         env_batch = read_binlog_files(spark, binlog_dir)
-        available = [(r["db"], r["table"]) for r in
-                     env_batch.select("db", "table").distinct()
-                     .collect() if r["db"] and r["table"]]
+        available = _binlog_tables(cfg, env_batch)
     elif changelog_dir and os.path.isdir(changelog_dir):
         for entry in sorted(os.listdir(changelog_dir)):
             if "." in entry and os.path.isdir(
@@ -817,7 +826,8 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
             # tombstones dropped, `op` excluded (compact() rewrites
             # it to 'insert') -- so the verdict holds before AND
             # after compaction. Spark-mode digests (JVM xxhash64),
-            # one scan per side + the n_buckets exchange.
+            # one scan per side + the n_buckets exchange. The sink
+            # side is the drain's own dedup-on-read view.
             from .operators.upsert import latest_state
             sink_path = cfg.sink_dir(rule)
             line = {"rule": rule.key, "mode": "checksum",
@@ -832,11 +842,11 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
                                  "ClickHouse sink)")
                 results.append(line)
                 continue
-            dst_raw = (spark.read.option("mergeSchema", "true")
-                       .parquet(sink_path))
+            sink_state = StreamingSyncPipeline(
+                rule, list(rule.pk), sink_path,
+                cfg.checkpoint_dir(rule)).current_state(spark)
             report, diff = sv.sync_verify(
-                latest_state(projected, pk),
-                latest_state(dst_raw, pk), pk, buckets,
+                latest_state(projected, pk), sink_state, pk, buckets,
                 drill_down=deep, sample=sample, dup_grain=dup_grain)
             line["schema_missing_in_sink"] = \
                 report["schema_missing_in_sink"]

@@ -516,12 +516,11 @@ def tpch_suite_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast size (see _Q21_SPARK's header); the oracle always keeps
     the original decorrelated-EXISTS text, so whichever variant runs
     is checked against the original semantics."""
-    try:
-        big = os.path.getsize(os.path.join(
-            sf_dir, "lineitem.parquet")) >= _Q21_REWRITE_BYTES
-    except OSError:
-        # directory-backed (cluster-scale) lineitem: the rewrite regime
-        big = os.path.isdir(os.path.join(sf_dir, "lineitem.parquet"))
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    # a directory-backed (cluster-scale) lineitem is the rewrite
+    # regime; getsize on a directory is the inode size, so check first
+    big = (os.path.isdir(path)
+           or os.path.getsize(path) >= _Q21_REWRITE_BYTES)
     return _run_suite(spark, sf_dir,
                       _SUITE_B_SPARK_SQL if big else _SUITE_B_SQL)
 

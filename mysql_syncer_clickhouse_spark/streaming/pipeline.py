@@ -17,14 +17,20 @@ Mapping from the reference:
   append to the changelog table; upsert semantics come from
   operators/upsert.latest_state on read (ReplacingMergeTree analog),
   and compact() is the explicit background-merge analog.
+- the ClickHouse table's own column list -> `_sink_schema.json` in
+  the sink directory: the union of every schema the writer appended,
+  so the dedup-on-read view needs no footer-merge job to find it.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -32,6 +38,10 @@ from pyspark.sql.types import StructType
 
 from ..operators.upsert import latest_state
 from ..plans.rules import Rule
+
+# the sink's schema sidecar: `_`-prefixed, so Spark's file listing
+# never takes it for a data file
+SINK_SCHEMA_FILE = "_sink_schema.json"
 
 
 @dataclass
@@ -213,6 +223,7 @@ class StreamingSyncPipeline:
             if stats:
                 self.metrics.record_sink_stats(stats)
         else:
+            self._merge_sink_schema(batch_df.sparkSession, projected.schema)
             obs = Observation()
             projected = projected.observe(obs, *stat_cols)
             writer = projected.write.mode("append") \
@@ -261,15 +272,97 @@ class StreamingSyncPipeline:
 
     def current_state(self, spark: SparkSession) -> DataFrame:
         """Dedup-on-read view of the sink (ReplacingMergeTree SELECT
-        ... FINAL analog). mergeSchema tolerates files written before
-        and after a mid-stream DDL (ADD/DROP COLUMN): the union schema
-        is taken and absent columns read as NULL, mirroring the
-        reference's re-introspection on OnTableChanged
-        (river/sync.go:54-60, river/river.go:166-180)."""
-        sink = (spark.read.option("mergeSchema", "true")
-                .format(self.sink_format).load(self.sink_dir))
-        return latest_state(sink, list(self._sink_pk()), self.seq_col,
+        ... FINAL analog). Files written before and after a mid-stream
+        DDL (ADD/DROP COLUMN) read under their union schema, absent
+        columns as NULL, mirroring the reference's re-introspection on
+        OnTableChanged (river/sync.go:54-60, river/river.go:166-180).
+
+        The union comes from the sink's `_sink_schema.json` sidecar,
+        which the writer keeps a superset of the data files, so the
+        read submits no schema job before its action. Columns the
+        sidecar holds but no file does yet (a crash between the
+        sidecar write and the append it precedes) read as NULL until
+        the replayed epoch lands. A sink without a sidecar (written
+        before it existed, or dropped after a same-name type change)
+        reads with mergeSchema: one footer-merge job per read, and
+        Spark's merge decides every type."""
+        schema = self._read_sink_schema()
+        reader = spark.read.format(self.sink_format)
+        if schema is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(schema)
+        return latest_state(reader.load(self.sink_dir),
+                            list(self._sink_pk()), self.seq_col,
                             self.op_col)
+
+    def _read_sink_schema(self) -> StructType | None:
+        """The sidecar's schema; None when absent or unreadable --
+        the mergeSchema read is always correct, only slower."""
+        try:
+            with open(os.path.join(self.sink_dir, SINK_SCHEMA_FILE)) as fh:
+                return StructType.fromJson(json.load(fh))
+        except (FileNotFoundError, ValueError, KeyError, TypeError):
+            return None
+
+    def _write_sink_schema(self, schema: StructType) -> None:
+        """Atomic replace (tmp + os.replace), like _master.info."""
+        os.makedirs(self.sink_dir, exist_ok=True)
+        path = os.path.join(self.sink_dir, SINK_SCHEMA_FILE)
+        with open(path + ".tmp", "w") as fh:
+            json.dump(schema.jsonValue(), fh)
+        os.replace(path + ".tmp", path)
+
+    def _data_schema(self, schema: StructType) -> StructType:
+        """`schema` less the partition columns: those live in the
+        directory names and are typed by partition discovery on every
+        read, sidecar or not."""
+        return StructType([f for f in schema.fields
+                           if f.name not in self.partition_cols])
+
+    def _merge_sink_schema(self, spark: SparkSession,
+                           batch: StructType) -> None:
+        """Fold one epoch's projected schema into the sidecar BEFORE
+        its append, so the sidecar is always a superset of the data
+        files: new fields append, same-name fields keep their type.
+
+        The sidecar never picks a type. A same-name field whose type
+        differs (names compared case-insensitively, as Spark resolves
+        them) drops the sidecar, so reads go back to Spark's merge and
+        fail or widen exactly as they did without it. A sink that has
+        data but no sidecar is seeded once from that same merge; if
+        the merge fails the sink stays without one."""
+        path = os.path.join(self.sink_dir, SINK_SCHEMA_FILE)
+        known = self._read_sink_schema()
+        if known is None and self._sink_has_data():
+            try:
+                known = self._data_schema(
+                    spark.read.option("mergeSchema", "true")
+                    .format(self.sink_format).load(self.sink_dir).schema)
+            except (Py4JJavaError, PySparkException):
+                # Spark cannot merge the existing files: readers get
+                # the same error from the mergeSchema read
+                return
+        fields = list(known.fields) if known is not None else []
+        by_name = {f.name.lower(): f for f in fields}
+        for f in self._data_schema(batch).fields:
+            old = by_name.get(f.name.lower())
+            if old is None:
+                fields.append(f)
+            elif (old.name != f.name or old.dataType.simpleString()
+                  != f.dataType.simpleString()):
+                if os.path.exists(path):
+                    os.remove(path)
+                return
+        if known is None or len(fields) > len(known.fields):
+            self._write_sink_schema(StructType(fields))
+
+    def _sink_has_data(self) -> bool:
+        try:
+            return any(not n.startswith(("_", "."))
+                       for n in os.listdir(self.sink_dir))
+        except FileNotFoundError:
+            return False
 
     def compact(self, spark: SparkSession, *,
                 ttl_col: str | None = None,
@@ -374,6 +467,9 @@ class StreamingSyncPipeline:
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
         writer.save(self.sink_dir)
+        # the overwrite deleted the sidecar with the old files; until
+        # this line readers fall back to the (correct) mergeSchema read
+        self._write_sink_schema(self._data_schema(back.schema))
 
     def _sink_pk(self) -> list[str]:
         """PK names after rule renames."""

@@ -165,6 +165,51 @@ def test_cli_binlog_dir_drains_binlog_files(spark, tmp_path):
     assert len(final) == 1 and final[0]["es_title"] == "first-edited"
 
 
+def test_binlog_exact_rules_skip_table_discovery(spark, tmp_path,
+                                                monkeypatch):
+    """Exact-match rules need no (db, table) listing of the binlogs,
+    so run_binlog submits no discovery decode; the same binlogs under
+    a [[source]] block are listed exactly once (the wildcard
+    expansion's input), which shows the probe would see it."""
+    from mysql_syncer_clickhouse_spark.__main__ import run_binlog
+    from mysql_syncer_clickhouse_spark.sources.binlog_writer import (
+        BinlogColumn, BinlogFileWriter)
+
+    collected = []
+    frame_cls = type(spark.range(1))
+    real_collect = frame_cls.collect
+
+    def spy(self):
+        collected.append(tuple(self.columns))
+        return real_collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    d = tmp_path / "binlogs"
+    d.mkdir()
+    w = BinlogFileWriter("app", "items",
+                         [BinlogColumn.bigint("id"),
+                          BinlogColumn.varchar("title", 80),
+                          BinlogColumn.bigint("mydate")], table_id=11)
+    w.insert([[1, "first", 86400], [2, "second", 86400]])
+    (d / "mysql-bin.000001").write_bytes(w.to_bytes())
+
+    toml = tmp_path / "exact.toml"
+    toml.write_text('[[rule]]\nschema = "app"\ntable = "items"\n'
+                    'id = ["id"]\n')
+    cfg = EngineConfig.from_toml(str(toml))
+    cfg.data_dir = str(tmp_path / "exact")
+    out = run_binlog(cfg, str(d), spark=spark)
+    assert [x["rows"] for x in out] == [2]
+    assert ("db", "table") not in collected
+
+    collected.clear()
+    cfg = EngineConfig.from_toml(TOML)          # has a [[source]] block
+    cfg.data_dir = str(tmp_path / "sources")
+    out = run_binlog(cfg, str(d), spark=spark)
+    assert [x["rows"] for x in out] == [2]
+    assert collected.count(("db", "table")) == 1
+
+
 def test_cli_sink_addr_applies_to_clickhouse_native(spark, tmp_path):
     """river.toml's sink_addr (reference river/config.go:24-27) routes
     the drain into ClickHouse over native TCP: auto-CREATE from the

@@ -132,3 +132,28 @@ def test_q21_rewrite_equals_original_exists_text(spark, sf_dir):
     res = con.execute(tpch._SUITE_B_SQL)
     duck = _rows([d[0] for d in res.description], res.fetchall())
     assert results["rewrite"] == duck
+
+
+def test_q21_dispatch_picks_rewrite_for_directory_lineitem(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """tpch_suite_b runs the q21 rewrite for a directory-backed
+    lineitem however few bytes it holds (the cluster-scale layout),
+    and the original text for a small single-file lineitem."""
+    import shutil
+
+    from mysql_syncer_clickhouse_spark.queries import tpch
+
+    chosen = []
+    monkeypatch.setattr(tpch, "_run_suite",
+                        lambda spark, sf_dir, sql: chosen.append(sql))
+    as_dir = tmp_path / "dir"
+    (spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+     .limit(5).coalesce(1).write.parquet(
+         str(as_dir / "lineitem.parquet")))
+    as_file = tmp_path / "file"
+    as_file.mkdir()
+    shutil.copy(os.path.join(sf_dir, "lineitem.parquet"), as_file)
+    tpch.tpch_suite_b(spark, str(as_dir))
+    tpch.tpch_suite_b(spark, str(as_file))
+    assert chosen[0] is tpch._SUITE_B_SPARK_SQL
+    assert chosen[1] is tpch._SUITE_B_SQL

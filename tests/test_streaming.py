@@ -4,14 +4,18 @@ checkpoint machinery, including the reference's kill/resume contract
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mysql_syncer_clickhouse_spark.operators.upsert import latest_state
 from mysql_syncer_clickhouse_spark.plans.rules import Rule
-from mysql_syncer_clickhouse_spark.streaming.pipeline import StreamingSyncPipeline
+from mysql_syncer_clickhouse_spark.streaming.pipeline import (
+    SINK_SCHEMA_FILE, StreamingSyncPipeline)
 
 SCHEMA_DDL = "seq long, op string, id long, title string, mydate long"
 
@@ -56,6 +60,38 @@ def dirs(tmp_path):
 
 def _schema(spark):
     return spark.createDataFrame([], SCHEMA_DDL).schema
+
+
+def _sidecar(sink):
+    with open(os.path.join(sink, SINK_SCHEMA_FILE)) as fh:
+        return StructType.fromJson(json.load(fh))
+
+
+def _jobs_in_group(spark, fn):
+    """Run fn under a fresh job group; return its result and the ids
+    of the Spark jobs it submitted."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job probe")
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_same_frame(a, b):
+    """Same column names (in any order) and the same rows."""
+    cols = sorted(a.columns)
+    assert cols == sorted(b.columns)
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.select(*cols).collect()),
+                      key=repr)
+    assert rows(a) == rows(b)
 
 
 def test_stream_apply_and_state(spark, dirs):
@@ -127,14 +163,123 @@ def test_schema_evolution_add_drop_column(spark, dirs):
     pipe2.run_available(spark, src,
                         spark.createDataFrame([], v2_ddl).schema)
 
-    state = pipe2.current_state(spark)
+    # the sidecar holds the union: reading through it submits no
+    # schema job before the action
+    state, jobs = _jobs_in_group(spark, lambda: pipe2.current_state(spark))
+    assert jobs == []
     assert {"seq", "id", "es_title", "mydate", "extra"} <= set(state.columns)
-    rows = {r["id"]: r for r in state.collect()}
+    collected, jobs = _jobs_in_group(spark, state.collect)
+    assert jobs                             # the probe does see jobs
+    rows = {r["id"]: r for r in collected}
     assert rows[1]["es_title"] == "first-v2"
     assert rows[1]["extra"] == "patched"
     assert rows[1]["mydate"] is None        # dropped post-DDL -> NULL
     assert rows[2]["extra"] is None         # pre-DDL row -> NULL
     assert rows[4]["es_title"] == "fourth"
+    # ... and that union is what Spark's footer merge finds, columns
+    # and values alike
+    merged = spark.read.option("mergeSchema", "true").parquet(sink)
+    _assert_same_frame(spark.read.schema(_sidecar(sink)).parquet(sink),
+                       merged)
+    _assert_same_frame(state, latest_state(merged, ["id"]))
+
+
+def test_legacy_sink_without_sidecar_reads_merged_then_gains_one(
+        spark, dirs):
+    """A sink written before the sidecar existed reads as before, with
+    mergeSchema (a footer-merge job ahead of the action), and its
+    writer adds the sidecar at the next epoch."""
+    src, sink, ckpt = dirs
+    _write_part(spark, src, ROWS_PART1, "p1")
+    pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
+    pipe.run_available(spark, src, _schema(spark))
+    os.remove(os.path.join(sink, SINK_SCHEMA_FILE))
+    state, jobs = _jobs_in_group(spark, lambda: pipe.current_state(spark))
+    assert jobs
+    assert {r["id"]: r["es_title"] for r in state.collect()} == \
+        {1: "first-edited", 2: "second"}
+
+    v2_ddl = "seq long, op string, id long, title string, extra string"
+    _write_part(spark, src, [(4, "insert", 4, "fourth", "bonus")], "p2",
+                schema=v2_ddl)
+    pipe2 = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
+    pipe2.run_available(spark, src,
+                        spark.createDataFrame([], v2_ddl).schema)
+    assert set(_sidecar(sink).fieldNames()) == \
+        {"seq", "op", "id", "es_title", "mydate", "extra"}
+    _assert_same_frame(spark.read.schema(_sidecar(sink)).parquet(sink),
+                       spark.read.option("mergeSchema", "true")
+                       .parquet(sink))
+    state, jobs = _jobs_in_group(spark, lambda: pipe2.current_state(spark))
+    assert jobs == []
+    assert {r["id"]: (r["es_title"], r["extra"])
+            for r in state.collect()} == {
+        1: ("first-edited", None), 2: ("second", None),
+        4: ("fourth", "bonus")}
+
+
+def test_same_name_type_change_drops_sidecar(spark, dirs):
+    """The sidecar never picks a type: a column that comes back under
+    its old name with a new type drops the sidecar, so the read goes
+    through Spark's merge and fails there, as it did without one."""
+    src, sink, ckpt = dirs
+    _write_part(spark, src, ROWS_PART1, "p1")
+    pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
+    pipe.run_available(spark, src, _schema(spark))
+    v2_ddl = "seq long, op string, id long, title string, mydate string"
+    _write_part(spark, src, [(4, "insert", 4, "fourth", "soon")], "p2",
+                schema=v2_ddl)
+    pipe.run_available(spark, src,
+                       spark.createDataFrame([], v2_ddl).schema)
+    assert not os.path.exists(os.path.join(sink, SINK_SCHEMA_FILE))
+    with pytest.raises(Exception, match="CANNOT_MERGE"):
+        pipe.current_state(spark).collect()
+    # the next epoch cannot seed a sidecar from the unmergeable files;
+    # it still appends, as the writer always did
+    _write_part(spark, src, [(5, "insert", 5, "fifth", "later")], "p3",
+                schema=v2_ddl)
+    pipe.run_available(spark, src,
+                       spark.createDataFrame([], v2_ddl).schema)
+    assert not os.path.exists(os.path.join(sink, SINK_SCHEMA_FILE))
+    assert spark.read.schema("seq long").parquet(sink).count() == 5
+
+
+def test_sidecar_ahead_of_data_reads_right(spark, dirs):
+    """A crash between the sidecar write and the append it precedes
+    leaves a sidecar column no data file has yet: reads stay right
+    (that column reads NULL), and the replayed epoch lands its rows
+    exactly once."""
+    src, sink, ckpt = dirs
+    _write_part(spark, src, ROWS_PART1, "p1")
+    pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
+    pipe.run_available(spark, src, _schema(spark))
+
+    v2_ddl = "seq long, op string, id long, title string, extra string"
+    v2 = spark.createDataFrame([], v2_ddl).schema
+    _write_part(spark, src, [(4, "insert", 4, "fourth", "bonus")], "p2",
+                schema=v2_ddl)
+    crashing = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
+    merge = crashing._merge_sink_schema
+
+    def merge_then_crash(spark_, schema):
+        merge(spark_, schema)
+        raise RuntimeError("crash between sidecar write and append")
+
+    crashing._merge_sink_schema = merge_then_crash
+    with pytest.raises(Exception, match="crash between"):
+        crashing.run_available(spark, src, v2)
+    assert "extra" in _sidecar(sink).fieldNames()
+    assert {r["id"]: (r["es_title"], r["extra"])
+            for r in pipe.current_state(spark).collect()} == {
+        1: ("first-edited", None), 2: ("second", None)}
+
+    resumed = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
+    resumed.run_available(spark, src, v2)
+    assert {r["id"]: (r["es_title"], r["extra"])
+            for r in resumed.current_state(spark).collect()} == {
+        1: ("first-edited", None), 2: ("second", None),
+        4: ("fourth", "bonus")}
+    assert spark.read.parquet(sink).count() == 4
 
 
 def test_streaming_windowed_agg_memory_sink(spark, dirs):
@@ -193,6 +338,30 @@ def test_partitioned_sink_prunes_and_preserves_state(spark, dirs):
     after = {r["id"]: r["es_title"]
              for r in pipe.current_state(spark).collect()}
     assert after == state
+
+
+def test_compact_leaves_a_valid_sidecar(spark, dirs):
+    """compact() overwrites the sink (sidecar included) and writes the
+    sidecar back: it matches the compacted files, keeps the partition
+    column out (partition discovery types it), and reads submit no
+    schema job."""
+    src, sink, ckpt = dirs
+    _write_part(spark, src, ROWS_PART1, "p1")
+    _write_part(spark, src, ROWS_PART2, "p2")
+    pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt,
+                                 partition_cols=("op",))
+    pipe.run_available(spark, src, _schema(spark))
+    before = {r["id"]: r["es_title"]
+              for r in pipe.current_state(spark).collect()}
+    pipe.compact(spark)
+
+    assert "op" not in _sidecar(sink).fieldNames()
+    _assert_same_frame(spark.read.schema(_sidecar(sink)).parquet(sink),
+                       spark.read.option("mergeSchema", "true")
+                       .parquet(sink))
+    state, jobs = _jobs_in_group(spark, lambda: pipe.current_state(spark))
+    assert jobs == []
+    assert {r["id"]: r["es_title"] for r in state.collect()} == before
 
 
 def test_stateful_running_op_counts(spark, dirs):
