@@ -7,16 +7,20 @@ daemon (main.go:25-106), Spark-native.
     python -m mysql_syncer_clickhouse_spark \
         --config etc/river.toml --binlog-dir /var/lib/mysql-binlogs
 
-Reads the SAME river.toml an existing deployment already has. Each
-[[rule]] becomes one StreamingSyncPipeline: readStream over the rule's
-changelog parquet directory (`<changelog-dir>/<schema>.<table>/`; a
-Kafka/Debezium source drops in at the same seam), foreachBatch apply
-into `<data_dir>/<sink_schema>.<sink_table>`, checkpoint under
-`<data_dir>/_checkpoints/`. Without --follow it drains what's there
-(availableNow) and exits -- the catch-up/batch mode; with --follow it
-keeps a processingTime trigger running at flush_bulk_time cadence.
-Prints per-rule op counters (the /stat analog, river/status.go:49-68)
-as one JSON line each.
+Reads the SAME river.toml an existing deployment already has. Every
+source mode shares one per-rule drain (_drain_rule): a per-source
+reader turns each [[rule]]'s table into a changelog frame (seq, op,
+cols...) -- a stream over `<changelog-dir>/<schema>.<table>/` parquet
+or over binlog files, or one batch of mysqldump snapshot rows at
+seq=-1 -- and one StreamingSyncPipeline applies it into
+`<data_dir>/<sink_schema>.<sink_table>` (checkpoint under
+`<data_dir>/_checkpoints/`). A stream runs through foreachBatch; a
+batch is one epoch through the same apply. Without --follow a stream
+drains what's there (availableNow) and exits -- the catch-up/batch
+mode; with --follow it keeps a processingTime trigger running at
+flush_bulk_time cadence. The --checksum verifier rebuilds its expected
+state from the same readers. Prints per-rule op counters (the /stat
+analog, river/status.go:49-68) as one JSON line each.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 
 from .config import EngineConfig
@@ -89,21 +94,25 @@ class _AggregatedMetrics:
         return tot
 
 
-def _start_stat_server(stat_addr: str, pipes: list[StreamingSyncPipeline],
-                       data_dir: str | None = None):
-    """stat_addr is 'host:port' (river.toml format). The server is a
-    daemon thread -- it lives as long as the process, like the
-    reference's http.ListenAndServe. With `data_dir`, /stat also
-    serves the last --checksum verdict (`last_verify` + its age)."""
+def _stat_lines(cfg: EngineConfig,
+                pipes: list[StreamingSyncPipeline]) -> list[dict]:
+    """Start the /stat server when river.toml sets stat_addr
+    ('host:port') and return its result line. The server is a daemon
+    thread -- it lives as long as the process, like the reference's
+    http.ListenAndServe -- and also serves the last --checksum verdict
+    (`last_verify` + its age) from data_dir."""
+    if not cfg.stat_addr:
+        return []
     from .streaming.status import StatusServer
-    host, _, port = stat_addr.rpartition(":")
+    host, _, port = cfg.stat_addr.rpartition(":")
     srv = StatusServer(_AggregatedMetrics(pipes), port=int(port),
                        host=host or "127.0.0.1",
                        verify_file=(os.path.join(
-                           data_dir, "_checksum_last.json")
-                           if data_dir else None))
+                           cfg.data_dir, "_checksum_last.json")
+                           if cfg.data_dir else None))
     srv.start()
-    return srv
+    return [{"stat":
+             f"http://{srv._httpd.server_address[0]}:{srv.port}/stat"}]
 
 
 def _attach_ch_sink(cfg: EngineConfig, pipe: StreamingSyncPipeline,
@@ -155,74 +164,146 @@ def _build_ch_sink(cfg: EngineConfig, db: str, table: str,
         secure=bool(cfg.sink_secure), ca_file=cfg.sink_ca or None)
 
 
-def run(cfg: EngineConfig, changelog_dir: str, *, follow: bool = False,
-        compact: bool = False, spark=None) -> list[dict]:
-    spark = spark or get_spark("mysql-syncer-clickhouse-spark",
-                               cpus=cfg.threads)
-    results = []
-    pipes: list[StreamingSyncPipeline] = []
-    if cfg.stat_addr:
-        srv = _start_stat_server(cfg.stat_addr, pipes,
-                                 data_dir=cfg.data_dir)
-        results.append(
-            {"stat": f"http://{srv._httpd.server_address[0]}:{srv.port}/stat"})
-    # [[source]] wildcard expansion against what the changelog
-    # actually contains -- the file-source analog of the reference's
-    # information_schema query (river/river.go:203-209)
-    available = []
-    if os.path.isdir(changelog_dir):    # a missing root stays the
-        # graceful no-op it always was (each rule's dir check skips)
+def _rules_to_drain(cfg: EngineConfig, available) -> list:
+    """The effective rules a drain applies: skip_no_pk_table drops the
+    rules that declare no pk before any source is read."""
+    return [r for r in cfg.effective_rules(available).rules
+            if r.pk or not cfg.skip_no_pk_table]
+
+
+def _drain_rule(cfg: EngineConfig, spark, rule, changelog, *,
+                follow: bool, compact: bool,
+                pipes: list[StreamingSyncPipeline],
+                results: list[dict]) -> bool:
+    """Apply one rule's changelog frame (seq, op, cols...) -- the
+    per-rule apply loop every source mode shares (the reference's
+    river/sync.go). A streaming frame runs under the rule's checkpoint
+    (availableNow, or the flush_bulk_time trigger with `follow`); a
+    batch frame -- a dump snapshot -- is one epoch through the same
+    apply. Appends the rule's result line; returns whether it drained.
+
+    Identity rules from [[source]] GUESS pk=('id',) (the reference
+    introspects the real PK from live MySQL, river/river.go:279-291):
+    a table without it skips LOUDLY with the remedy before any sink
+    is touched, instead of crashing in latest_state."""
+    missing_pk = [c for c in rule.pk if c not in changelog.columns]
+    if missing_pk:
+        print(f"WARN: {rule.key}: pk column(s) {missing_pk} not "
+              f"in the table; skipping -- declare an explicit "
+              f"[[rule]] with id = [...] for this table",
+              file=sys.stderr, flush=True)
+        results.append({"rule": rule.key,
+                        "skipped_missing_pk": missing_pk})
+        return False
+    pipe = StreamingSyncPipeline(
+        rule, list(rule.pk), cfg.sink_dir(rule),
+        cfg.checkpoint_dir(rule), skip_ops=cfg.skip_ops())
+    sink_desc = cfg.sink_dir(rule)
+    if cfg.sink_addr:
+        sink_desc = _attach_ch_sink(cfg, pipe, spark, changelog.schema)
+    pipes.append(pipe)
+    if not changelog.isStreaming:
+        pipe._apply_batch(changelog, epoch_id=-1)
+    else:
+        q = pipe.start_stream(changelog, **cfg.trigger_kwargs(follow))
+        if follow:
+            results.append({"rule": rule.key, "mode": "following"})
+            return True
+        q.awaitTermination()
+    if compact and pipe.ch_sink is None:
+        pipe.compact(spark)   # ClickHouse merges itself
+    line = {
+        "rule": rule.key,
+        "sink": sink_desc,
+        "ops": pipe.metrics.snapshot(),
+    }
+    if pipe.ch_sink is None:
+        line["rows"] = pipe.current_state(spark).count()
+    results.append(line)
+    return True
+
+
+def _changelog_tables(changelog_dir: str) -> list[tuple[str, str]]:
+    """The (db, table) pairs a changelog root holds, for [[source]]
+    wildcard expansion -- the file-source analog of the reference's
+    information_schema query (river/river.go:203-209). A missing root
+    lists nothing: the graceful no-op it always was."""
+    pairs = []
+    if os.path.isdir(changelog_dir):
         for entry in sorted(os.listdir(changelog_dir)):
             if "." in entry and os.path.isdir(
                     os.path.join(changelog_dir, entry)):
                 db, _, tbl = entry.partition(".")
-                available.append((db, tbl))
-    for rule in cfg.effective_rules(available).rules:
-        src = os.path.join(changelog_dir,
-                           f"{rule.source_schema}.{rule.source_table}")
-        if not os.path.isdir(src):
-            continue
-        if not rule.pk and cfg.skip_no_pk_table:
-            continue
-        schema = spark.read.parquet(src).schema
-        missing_pk = [c for c in rule.pk if c not in schema.names]
-        if missing_pk:
-            # identity rules from [[source]] GUESS pk=('id',) (the
-            # reference introspects the real PK from live MySQL,
-            # river/river.go:279-291); a table without it must skip
-            # LOUDLY with the remedy, not crash in latest_state
-            print(f"WARN: {rule.key}: pk column(s) {missing_pk} not "
-                  f"in the table; skipping -- declare an explicit "
-                  f"[[rule]] with id = [...] for this table",
-                  file=sys.stderr, flush=True)
-            results.append({"rule": rule.key,
-                            "skipped_missing_pk": missing_pk})
-            continue
-        pipe = StreamingSyncPipeline(
-            rule, list(rule.pk), cfg.sink_dir(rule),
-            cfg.checkpoint_dir(rule), skip_ops=cfg.skip_ops())
-        sink_desc = cfg.sink_dir(rule)
-        if cfg.sink_addr:
-            sink_desc = _attach_ch_sink(cfg, pipe, spark, schema)
-        pipes.append(pipe)
-        if follow:
-            pipe.start(spark, src, schema,
-                       max_files_per_trigger=cfg.bulk_size,
-                       **cfg.trigger_kwargs(follow=True))
-            results.append({"rule": rule.key, "mode": "following"})
-            continue
-        pipe.run_available(spark, src, schema,
-                           max_files_per_trigger=cfg.bulk_size)
-        if compact and pipe.ch_sink is None:
-            pipe.compact(spark)   # ClickHouse merges itself
-        line = {
-            "rule": rule.key,
-            "sink": sink_desc,
-            "ops": pipe.metrics.snapshot(),
-        }
-        if pipe.ch_sink is None:
-            line["rows"] = pipe.current_state(spark).count()
-        results.append(line)
+                pairs.append((db, tbl))
+    return pairs
+
+
+def _changelog_frame(spark, changelog_dir: str, rule, *,
+                     bulk_size: int | None = None):
+    """One rule's changelog parquet directory
+    (`<changelog_dir>/<schema>.<table>/`): a batch frame, or with
+    `bulk_size` a stream of at most that many files per trigger under
+    the batch read's schema. None when the directory is absent."""
+    src = os.path.join(changelog_dir,
+                       f"{rule.source_schema}.{rule.source_table}")
+    if not os.path.isdir(src):
+        return None
+    batch = spark.read.parquet(src)
+    if bulk_size is None:
+        return batch
+    return (spark.readStream.schema(batch.schema)
+            .option("maxFilesPerTrigger", bulk_size).parquet(src))
+
+
+def _dump_frame(spark, dump_path: str, rule, *, multiline: bool):
+    """One rule's table from a mysqldump snapshot as insert ops at
+    seq=-1, sorting before every live change -- the bootstrap apply
+    contract, so a later binlog drain upserts on top. None when the
+    table is absent from the dump; a DumpFormatError propagates."""
+    from pyspark.sql import functions as F
+
+    from .sources.mysqldump import TableNotInDumpError, read_mysqldump
+    try:
+        df = read_mysqldump(spark, dump_path, rule.source_table,
+                            multiline=multiline)
+    except TableNotInDumpError:
+        return None
+    return df.select(F.lit(-1).cast("long").alias("seq"),
+                     F.lit("insert").alias("op"), *df.columns)
+
+
+def _binlog_frame(spark, binlog_dir: str, env_batch, rule, *,
+                  bulk_size: int | None = None):
+    """One rule's changelog from binlog files. The row schema comes
+    from a sampled image of the batch envelope `env_batch`
+    (_infer_row_ddl); the rows come from that batch, or with
+    `bulk_size` from a new stream over `binlog_dir` with at most that
+    many files per trigger. None while the table is absent from the
+    binlogs."""
+    from .sources.binlog import binlog_to_changelog, read_binlog_files
+    ddl = _infer_row_ddl(env_batch, rule.source_schema, rule.source_table)
+    if ddl is None:
+        return None
+    env = env_batch
+    if bulk_size is not None:
+        env = read_binlog_files(spark, binlog_dir, streaming=True,
+                                max_files_per_trigger=bulk_size)
+    return binlog_to_changelog(env, ddl, db=rule.source_schema,
+                               table=rule.source_table)
+
+
+def run(cfg: EngineConfig, changelog_dir: str, *, follow: bool = False,
+        compact: bool = False, spark=None) -> list[dict]:
+    spark = spark or get_spark("mysql-syncer-clickhouse-spark",
+                               cpus=cfg.threads)
+    pipes: list[StreamingSyncPipeline] = []
+    results = _stat_lines(cfg, pipes)
+    for rule in _rules_to_drain(cfg, _changelog_tables(changelog_dir)):
+        cl = _changelog_frame(spark, changelog_dir, rule,
+                              bulk_size=cfg.bulk_size)
+        if cl is not None:
+            _drain_rule(cfg, spark, rule, cl, follow=follow,
+                        compact=compact, pipes=pipes, results=results)
     return results
 
 
@@ -260,21 +341,30 @@ def _binlog_tables(cfg: EngineConfig, env_batch) -> list | None:
             if r["db"] and r["table"]]
 
 
+def _binlog_coord(file: str, pos: int) -> tuple[int, int]:
+    """Total order of binlog coordinates: (file index, position), the
+    index from the file name's numeric suffix (-1 without one)."""
+    m = re.search(r"\.(\d+)$", file)
+    return (int(m.group(1)) if m else -1, pos)
+
+
 def run_binlog(cfg: EngineConfig, binlog_dir: str, *,
                follow: bool = False, compact: bool = False,
                follow_ddl: bool = False, ddl_stop=None,
                spark=None) -> list[dict]:
     """--binlog-dir mode: drain MySQL binlog FILES through the same
-    rules/apply path as the changelog mode -- the reference's own
-    topology (main.go:25-106: one replication stream fanned out by
-    [[rule]]s). sources/binlog.py decodes the v4 format (one file =
-    one task). Each rule runs its own stream under its own checkpoint
-    and decodes every new file itself, so N rules decode each new
-    file N times -- there is no shared decode pass. Each rule's row
-    schema is also sampled from a batch read of the retained files
-    (_infer_row_ddl). Wildcard tables need [[source]] blocks: they
-    expand against the (db, table) pairs of one more full decode,
-    which runs only when such blocks exist.
+    per-rule drain (_drain_rule) as the changelog and dump modes --
+    the reference's own topology (main.go:25-106: one replication
+    stream fanned out by [[rule]]s). sources/binlog.py decodes the v4
+    format (one file = one task). Each rule runs its own stream under
+    its own checkpoint and decodes every new file itself, so N rules
+    decode each new file N times -- there is no shared decode pass.
+    Each rule's row schema is also sampled from a batch read of the
+    retained files (_infer_row_ddl); the --checksum verifier builds
+    its expected state through the same reader (_binlog_frame).
+    Wildcard tables need [[source]] blocks: they expand against the
+    (db, table) pairs of one more full decode, which runs only when
+    such blocks exist.
 
     `follow_ddl` (the --follow half of --apply-ddl): a daemon thread
     polls the directory for NEW schema-changing QUERY events at
@@ -285,17 +375,11 @@ def run_binlog(cfg: EngineConfig, binlog_dir: str, *,
     `ddl_stop.error` for the caller to surface. `ddl_stop` (a
     threading.Event; tests pass one to stop/inspect the poller --
     under the CLI the daemon thread simply dies with the process)."""
-    from .sources.binlog import binlog_to_changelog, read_binlog_files
+    from .sources.binlog import read_binlog_files
     spark = spark or get_spark("mysql-syncer-clickhouse-spark",
                                cpus=cfg.threads)
-    results: list[dict] = []
     pipes: list[StreamingSyncPipeline] = []
-    if cfg.stat_addr:
-        srv = _start_stat_server(cfg.stat_addr, pipes,
-                                 data_dir=cfg.data_dir)
-        results.append(
-            {"stat":
-             f"http://{srv._httpd.server_address[0]}:{srv.port}/stat"})
+    results = _stat_lines(cfg, pipes)
     if follow_ddl and follow:
         import threading
 
@@ -324,51 +408,12 @@ def run_binlog(cfg: EngineConfig, binlog_dir: str, *,
         results.append({"mode": "apply_ddl_follow",
                         "cadence_ms": cfg.flush_bulk_ms})
     env_batch = read_binlog_files(spark, binlog_dir)
-    for rule in cfg.effective_rules(
-            _binlog_tables(cfg, env_batch)).rules:
-        if not rule.pk and cfg.skip_no_pk_table:
-            continue
-        ddl = _infer_row_ddl(env_batch, rule.source_schema,
-                             rule.source_table)
-        if ddl is None:        # table absent from the binlogs so far
-            continue
-        from pyspark.sql.types import StructType as _ST
-        ddl_names = _ST.fromDDL(ddl).fieldNames()
-        missing_pk = [c for c in rule.pk if c not in ddl_names]
-        if missing_pk:
-            print(f"WARN: {rule.key}: pk column(s) {missing_pk} not "
-                  f"in the table; skipping -- declare an explicit "
-                  f"[[rule]] with id = [...] for this table",
-                  file=sys.stderr, flush=True)
-            results.append({"rule": rule.key,
-                            "skipped_missing_pk": missing_pk})
-            continue
-        env = read_binlog_files(spark, binlog_dir, streaming=True,
-                                max_files_per_trigger=cfg.bulk_size)
-        cl = binlog_to_changelog(env, ddl, db=rule.source_schema,
-                                 table=rule.source_table)
-        pipe = StreamingSyncPipeline(
-            rule, list(rule.pk), cfg.sink_dir(rule),
-            cfg.checkpoint_dir(rule), skip_ops=cfg.skip_ops())
-        sink_desc = cfg.sink_dir(rule)
-        if cfg.sink_addr:
-            sink_desc = _attach_ch_sink(cfg, pipe, spark, cl.schema)
-        pipes.append(pipe)
-        q = pipe.start_stream(cl, **cfg.trigger_kwargs(follow=follow))
-        if follow:
-            results.append({"rule": rule.key, "mode": "following"})
-            continue
-        q.awaitTermination()
-        if compact and pipe.ch_sink is None:
-            pipe.compact(spark)   # ClickHouse merges itself
-        line = {
-            "rule": rule.key,
-            "sink": sink_desc,
-            "ops": pipe.metrics.snapshot(),
-        }
-        if pipe.ch_sink is None:
-            line["rows"] = pipe.current_state(spark).count()
-        results.append(line)
+    for rule in _rules_to_drain(cfg, _binlog_tables(cfg, env_batch)):
+        cl = _binlog_frame(spark, binlog_dir, env_batch, rule,
+                           bulk_size=cfg.bulk_size)
+        if cl is not None:
+            _drain_rule(cfg, spark, rule, cl, follow=follow,
+                        compact=compact, pipes=pipes, results=results)
     return results
 
 
@@ -390,8 +435,6 @@ def run_apply_ddl(cfg: EngineConfig, binlog_dir: str, *,
     is deliberately NOT attempted -- ClickHouse MODIFY COLUMN on
     populated data is a rewrite a sync engine must not trigger
     implicitly)."""
-    import re as _re
-
     from .sources import ddl as ddlmod
     from .sources.binlog import read_binlog_ddl
 
@@ -402,11 +445,6 @@ def run_apply_ddl(cfg: EngineConfig, binlog_dir: str, *,
     # rules keep working via map_action's event-time fullmatch
     ddl_rules = cfg.effective_rules(None).rules
     info_path = os.path.join(cfg.data_dir, "_ddl.info")
-
-    def _key(file: str, pos: int) -> tuple[int, int]:
-        m = _re.search(r"\.(\d+)$", file)
-        return (int(m.group(1)) if m else -1, pos)
-
     mark = (-1, -1)
     saved: dict = {}
     if os.path.exists(info_path):
@@ -423,12 +461,12 @@ def run_apply_ddl(cfg: EngineConfig, binlog_dir: str, *,
                 f"({{\"file\": ..., \"pos\": ...}}) or delete it to "
                 f"deliberately re-apply from the first binlog "
                 f"statement") from None
-        mark = _key(saved["file"], saved["pos"])
+        mark = _binlog_coord(saved["file"], saved["pos"])
     ledger = ddlmod.ShadowLedger(saved.get("shadow"))
 
     rows = sorted(read_binlog_ddl(spark, binlog_dir).collect(),
-                  key=lambda r: _key(r["file"], r["pos"]))
-    rows = [r for r in rows if _key(r["file"], r["pos"]) > mark]
+                  key=lambda r: _binlog_coord(r["file"], r["pos"]))
+    rows = [r for r in rows if _binlog_coord(r["file"], r["pos"]) > mark]
     results: list[dict] = []
     sinks: dict[str, object] = {}
 
@@ -548,14 +586,8 @@ def run_retype(cfg: EngineConfig, binlog_dir: str, *,
     if not cfg.sink_addr:
         raise SystemExit("--retype needs sink_addr (a ClickHouse "
                          "sink to introspect)")
-    import re as _re
-
-    def _key(file: str, pos: int) -> tuple[int, int]:
-        m = _re.search(r"\.(\d+)$", file)
-        return (int(m.group(1)) if m else -1, pos)
-
     rows = sorted(read_binlog_ddl(spark, binlog_dir).collect(),
-                  key=lambda r: _key(r["file"], r["pos"]))
+                  key=lambda r: _binlog_coord(r["file"], r["pos"]))
     results: list[dict] = []
     _STRING_FALLBACK = ("String", "Nullable(String)")
     rules = cfg.effective_rules(None).rules
@@ -751,49 +783,26 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
         from .sources.binlog import read_binlog_files
         env_batch = read_binlog_files(spark, binlog_dir)
         available = _binlog_tables(cfg, env_batch)
-    elif changelog_dir and os.path.isdir(changelog_dir):
-        for entry in sorted(os.listdir(changelog_dir)):
-            if "." in entry and os.path.isdir(
-                    os.path.join(changelog_dir, entry)):
-                db, _, tbl = entry.partition(".")
-                available.append((db, tbl))
+    elif changelog_dir:
+        available = _changelog_tables(changelog_dir)
     # dump-only: no table listing to expand wildcards against --
     # effective_rules(None) keeps regex identity rules un-expanded,
     # and read_mysqldump's table lookup needs exact names anyway
     results: list[dict] = []
     for rule in cfg.effective_rules(available).rules:
+        # the drains' own readers: a dump's snapshot rows sort before
+        # every live change, so `--dump-sql snap.sql --binlog-dir d
+        # --checksum` models the full snapshot-then-replicate state
         frames = []
         if dump_path:
-            # verify a dump BOOTSTRAP landed intact: the snapshot rows
-            # are insert ops at seq=-1, sorting before every live
-            # change -- exactly run_dump's apply contract, so
-            # `--dump-sql snap.sql --binlog-dir d --checksum` models
-            # the full snapshot-then-replicate state
-            from .sources.mysqldump import (TableNotInDumpError,
-                                            read_mysqldump)
-            try:
-                ddf = read_mysqldump(spark, dump_path,
-                                     rule.source_table,
-                                     multiline=multiline)
-                frames.append(ddf.select(
-                    F.lit(-1).cast("long").alias("seq"),
-                    F.lit("insert").alias("op"), *ddf.columns))
-            except TableNotInDumpError:
-                pass
+            frames.append(_dump_frame(spark, dump_path, rule,
+                                      multiline=multiline))
         if changelog_dir:
-            src_path = os.path.join(
-                changelog_dir,
-                f"{rule.source_schema}.{rule.source_table}")
-            if os.path.isdir(src_path):
-                frames.append(spark.read.parquet(src_path))
+            frames.append(_changelog_frame(spark, changelog_dir, rule))
         if binlog_dir:
-            from .sources.binlog import binlog_to_changelog
-            ddl = _infer_row_ddl(env_batch, rule.source_schema,
-                                 rule.source_table)
-            if ddl is not None:
-                frames.append(binlog_to_changelog(
-                    env_batch, ddl, db=rule.source_schema,
-                    table=rule.source_table))
+            frames.append(_binlog_frame(spark, binlog_dir, env_batch,
+                                        rule))
+        frames = [f for f in frames if f is not None]
         if not frames:
             continue
         raw = frames[0]
@@ -1059,11 +1068,11 @@ def run_dump(cfg: EngineConfig, dump_path: str, *,
     river/river.go:111-146). Each rule's table parses line-parallel
     (sources/mysqldump.py) into op='insert', seq=-1 rows -- sorting
     before every live change event, exactly
-    apply_snapshot_and_changelog's contract -- and applies through
-    the SAME per-rule project/rename/sink pipeline as every other
-    mode, so a subsequent --binlog-dir / --tail drain upserts on top
-    idempotently. Compose: `--dump-sql snap.sql --tail @current` is
-    the reference's full snapshot-then-replicate topology.
+    apply_snapshot_and_changelog's contract -- and applies as one
+    batch epoch through the SAME per-rule drain (_drain_rule) as
+    every other mode, so a subsequent --binlog-dir / --tail drain
+    upserts on top idempotently. Compose: `--dump-sql snap.sql --tail
+    @current` is the reference's full snapshot-then-replicate topology.
 
     The dump's header coordinates (CHANGE MASTER/REPLICATION SOURCE
     position, gtid_purged's executed set) are persisted into
@@ -1078,11 +1087,8 @@ def run_dump(cfg: EngineConfig, dump_path: str, *,
     dumps (read_mysqldump's multiline contract)."""
     import glob as _glob
 
-    from pyspark.sql import functions as F
-
     from .sources.mysql_repl import MasterInfo
-    from .sources.mysqldump import (TableNotInDumpError, read_mysqldump,
-                                    scan_dump_header)
+    from .sources.mysqldump import scan_dump_header
     spark = spark or get_spark("mysql-syncer-clickhouse-spark",
                                cpus=cfg.threads)
     results: list[dict] = [{"mode": "dump", "dump": dump_path}]
@@ -1106,31 +1112,12 @@ def run_dump(cfg: EngineConfig, dump_path: str, *,
     if any(hdr.values()):
         results[0].update({k: v for k, v in hdr.items() if v})
     bootstrapped = 0
-    for rule in cfg.effective_rules(None).rules:
-        if not rule.pk and cfg.skip_no_pk_table:
-            continue
-        try:
-            df = read_mysqldump(spark, dump_path, rule.source_table,
-                                multiline=multiline)
-        except TableNotInDumpError:
-            continue               # table absent from this dump
-        cl = df.select(F.lit(-1).cast("long").alias("seq"),
-                       F.lit("insert").alias("op"), *df.columns)
-        pipe = StreamingSyncPipeline(
-            rule, list(rule.pk), cfg.sink_dir(rule),
-            cfg.checkpoint_dir(rule), skip_ops=cfg.skip_ops())
-        sink_desc = cfg.sink_dir(rule)
-        if cfg.sink_addr:
-            sink_desc = _attach_ch_sink(cfg, pipe, spark, cl.schema)
-        pipe._apply_batch(cl, epoch_id=-1)
-        if compact and pipe.ch_sink is None:
-            pipe.compact(spark)
-        line = {"rule": rule.key, "sink": sink_desc,
-                "ops": pipe.metrics.snapshot()}
-        if pipe.ch_sink is None:
-            line["rows"] = pipe.current_state(spark).count()
-        results.append(line)
-        bootstrapped += 1
+    for rule in _rules_to_drain(cfg, None):
+        cl = _dump_frame(spark, dump_path, rule, multiline=multiline)
+        if cl is not None:         # None: table absent from this dump
+            bootstrapped += _drain_rule(
+                cfg, spark, rule, cl, follow=False, compact=compact,
+                pipes=[], results=results)
     if bootstrapped and any(hdr.values()):
         # persist the resume coordinates only AFTER every rule
         # bootstrapped, and only if AT LEAST ONE actually did: a
@@ -1322,6 +1309,16 @@ def run_query(name: str, sf_dir: str, limit: int,
     rows = [r.asDict(recursive=True) for r in df.limit(limit).collect()]
     return {"mode": "query", "query": name, "sf_dir": sf_dir,
             "n_rows": len(rows), "rows": rows}
+
+
+def _parse_sample(text: str) -> tuple[int, int | None]:
+    """An `M:K` bucket-sample flag value: (M, K), K None for M:auto.
+    ValueError unless M > 0 and K is an integer or 'auto'."""
+    m, _, k = text.partition(":")
+    sample = (int(m), None if k == "auto" else int(k))
+    if sample[0] <= 0:
+        raise ValueError(text)
+    return sample
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -1536,11 +1533,7 @@ def main(argv: list[str] | None = None) -> int:
         sample = None
         if args.checksum_sample:
             try:
-                m, _, k = args.checksum_sample.partition(":")
-                sample = (int(m),
-                          None if k == "auto" else int(k))
-                if sample[0] <= 0:
-                    raise ValueError
+                sample = _parse_sample(args.checksum_sample)
             except ValueError:
                 ap.error("--checksum-sample wants M:K with M > 0 "
                          "(e.g. 16:3), or M:auto for a persisted "
@@ -1614,11 +1607,7 @@ def main(argv: list[str] | None = None) -> int:
         vsample = None
         if args.verify_after_drain != "full":
             try:
-                m, _, k = args.verify_after_drain.partition(":")
-                vsample = (int(m),
-                           None if k == "auto" else int(k))
-                if vsample[0] <= 0:
-                    raise ValueError
+                vsample = _parse_sample(args.verify_after_drain)
             except ValueError:
                 ap.error("--verify-after-drain wants M:K (e.g. 16:3),"
                          " M:auto for a persisted rotation, or no "

@@ -729,10 +729,13 @@ def semdedup(vecs: DataFrame, *, eps: float = 0.97, keep: str = "far",
     # pair stage: ONE numpy matrix pass per cluster when the id column
     # is integral (r16, guide §4.2 -- the per-pair interpreted dot fold
     # was the entry's dominant cost); the DataFrame fold is the
-    # reference implementation, kept for non-integral ids and the
+    # reference implementation, kept for non-integral ids, for
+    # sessions without a JVM handle (Spark Connect: the Arrow pass's
+    # round threshold asks the JVM's Double.toString) and for the
     # forced bit-equality tests (tests/test_semdedup_parity.py)
     id_type = dict(scored.dtypes)["id"]
-    if id_type in ("tinyint", "smallint", "int", "bigint"):
+    if id_type in ("tinyint", "smallint", "int", "bigint") and \
+            getattr(scored.sparkSession, "_jvm", None) is not None:
         dup = _semdedup_dups_arrow(scored, eps, keep, id_type)
     else:
         dup = _semdedup_dups_frame(scored, eps, keep)

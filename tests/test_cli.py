@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from mysql_syncer_clickhouse_spark.__main__ import run
 from mysql_syncer_clickhouse_spark.config import EngineConfig, parse_duration_ms
 
@@ -1556,3 +1558,42 @@ def test_identity_rule_without_id_column_skips_loudly(spark, tmp_path,
                     "skipped_missing_pk": ["id"]}]
     err = capsys.readouterr().err
     assert "declare an explicit [[rule]]" in err
+
+
+@pytest.mark.parametrize("mode", ["run", "run_binlog", "run_dump"])
+def test_every_drain_mode_skips_a_table_without_its_pk(spark, tmp_path,
+                                                       capsys, mode):
+    """A [[source]] identity rule guesses pk=('id',). Whichever source
+    feeds the drain -- changelog parquet, binlog files or a mysqldump
+    snapshot -- a table without that column skips with the WARN and a
+    `skipped_missing_pk` line, and no sink directory is written."""
+    import mysql_syncer_clickhouse_spark.__main__ as M
+    from mysql_syncer_clickhouse_spark.sources.binlog_writer import (
+        BinlogColumn, BinlogFileWriter)
+
+    src = tmp_path / "src"
+    if mode == "run":
+        spark.createDataFrame(
+            [(1, "insert", "x")], "seq long, op string, payload string"
+        ).coalesce(1).write.parquet(str(src / "app.noid"))
+    elif mode == "run_binlog":
+        src.mkdir()
+        w = BinlogFileWriter("app", "noid",
+                             [BinlogColumn.varchar("payload", 80)],
+                             table_id=11)
+        w.insert([["x"]])
+        (src / "mysql-bin.000001").write_bytes(w.to_bytes())
+    else:
+        src = tmp_path / "snap.sql"
+        src.write_text("CREATE TABLE `noid` (\n"
+                       "  `payload` varchar(80) DEFAULT NULL\n"
+                       ") ENGINE=InnoDB;\n"
+                       "INSERT INTO `noid` VALUES ('x');\n")
+    toml = tmp_path / "r.toml"
+    toml.write_text('[[source]]\nschema = "app"\ntables = ["noid"]\n')
+    cfg = EngineConfig.from_toml(str(toml))
+    cfg.data_dir = str(tmp_path / "log")
+    out = getattr(M, mode)(cfg, str(src), spark=spark)
+    assert out[-1] == {"rule": "app:noid", "skipped_missing_pk": ["id"]}
+    assert "declare an explicit [[rule]]" in capsys.readouterr().err
+    assert not os.path.exists(os.path.join(cfg.data_dir, "app.noid"))

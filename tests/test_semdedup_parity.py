@@ -142,3 +142,41 @@ def test_arrow_pair_stage_used_in_plan(spark, sf_dir):
     df = dedup_embedding_cosine(spark, sf_dir)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
+
+
+def test_session_without_jvm_takes_the_frame_pair_stage(spark,
+                                                        monkeypatch):
+    """A session with no JVM handle (Spark Connect) cannot ask the
+    JVM's Double.toString for the Arrow pass's round threshold, so
+    integral ids fall back to the DataFrame fold -- same rows as the
+    forced frame path."""
+    rows = [(0, "a", [1.0, 0.0, 1.0, 0.5]),
+            (1, "a", [2.0, 0.0, 2.0, 1.0]),
+            (2, "a", [-1.0, 1.0, 0.0, 0.0]),
+            (10, "b", [1.0, 0.0, 0.0, 0.0]),
+            (11, "b", [1.0, 0.19, 0.0, 0.0])]
+    vecs = spark.createDataFrame(
+        rows, "vid long, grp string, emb array<double>")
+    kw = dict(eps=0.98, keep="far", cluster_col="grp", id_col="vid",
+              vec_col="emb")
+    _, frame = _semdedup_both(vecs, monkeypatch, **kw)
+
+    class _NoJvmSession:
+        """The test session with its `_jvm` handle hidden, as a Spark
+        Connect session raises on that attribute."""
+
+        def __getattr__(self, name):
+            if name == "_jvm":
+                raise AttributeError(name)
+            return getattr(spark, name)
+
+    no_jvm_session = _NoJvmSession()
+    with monkeypatch.context() as m:
+        # frames report the handle-less session; pyspark's own column
+        # functions still find the active JVM session as they must
+        m.setattr(type(vecs), "sparkSession",
+                  property(lambda df: no_jvm_session))
+        m.setattr(ann, "_semdedup_dups_arrow", None)   # must not run
+        no_jvm = ann.semdedup(vecs, **kw).collect()
+    assert _rows_key(no_jvm) == _rows_key(frame)
+    assert any(not r["kept"] for r in no_jvm)          # non-trivial
