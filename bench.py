@@ -52,7 +52,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mysql_syncer_clickhouse_spark import queries as registry
-from mysql_syncer_clickhouse_spark.session import get_spark
+from mysql_syncer_clickhouse_spark.session import codegen_compiles, get_spark
 
 HEADLINE = [
     # relational (the work the reference delegates to ClickHouse)
@@ -145,13 +145,13 @@ def _cpu_busy_frac(interval: float = 0.2) -> float:
 
 
 def _time_query(
-        spark, fn, sf_dir: str,
-        reps: int) -> tuple[float, float, float, float, float, float]:
+        spark, fn, sf_dir: str, reps: int
+) -> tuple[float, float, float, float, float, float, int]:
     """(cold, legacy_cold, min_warm, load1_before, busy_before,
-    quiesce_wait_sec): warmup construction + execution, clear caches,
-    QUIESCE (bounded wait for the instantaneous busy fraction to drop
-    -- our own GC tail drains in seconds; persistent external load
-    won't, and then the flag is real), then:
+    quiesce_wait_sec, cold_compiles): warmup construction + execution,
+    clear caches, QUIESCE (bounded wait for the instantaneous busy
+    fraction to drop -- our own GC tail drains in seconds; persistent
+    external load won't, and then the flag is real), then:
 
     - cold (round 16, the graded number): time a FRESH fn() call
       through its first noop execution. Eager localCheckpoints run at
@@ -164,6 +164,8 @@ def _time_query(
       methodology (pins live, caches cold), the cross-round
       comparator.
     - min_warm: min of reps-1 further executions without clearing.
+    - cold_compiles: Janino compiles during the cold rep (classes the
+      codegen cache did not hold), read on both sides of the timer.
 
     load1_before stays recorded for cross-round continuity, but the
     per-query contamination flag keys on busy_before (see
@@ -196,10 +198,12 @@ def _time_query(
         waited += 1.2
         busy = _cpu_busy_frac()
     load1 = os.getloadavg()[0]
+    compiles0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     df2 = fn(spark, sf_dir)              # timed: pins build HERE
     _noop_write(df2)
     cold = time.perf_counter() - t0
+    compiles = codegen_compiles(spark) - compiles0
     spark.catalog.clearCache()           # pins survive; caches cold
     legacy_cold = _noop_write(df2)
     warm = min((_noop_write(df2) for _ in range(max(reps - 1, 1))),
@@ -208,7 +212,7 @@ def _time_query(
     # entry burns quiesce budget is slow in a way the flags alone
     # would hide
     return (round(cold, 3), round(legacy_cold, 3), round(warm, 3),
-            round(load1, 2), busy, round(waited, 1))
+            round(load1, 2), busy, round(waited, 1), compiles)
 
 
 def main() -> None:
@@ -261,11 +265,12 @@ def main() -> None:
     loads: dict[str, float] = {}
     busys: dict[str, float] = {}
     quiesce: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     retried: list[str] = []
     for name in names:
         (cold_times[name], legacy_times[name], warm_times[name],
-         loads[name], busys[name], quiesce[name]) = _time_query(
-            spark, all_q[name], sf_dir, reps)
+         loads[name], busys[name], quiesce[name],
+         compiles[name]) = _time_query(spark, all_q[name], sf_dir, reps)
     # auto-rerun suspects: a legacy-cold rep >4x its warm floor is
     # almost always a transient (GC pause, competing JVM, page-cache
     # miss burst) -- BENCH_r06 recorded a whole round of such drift.
@@ -277,8 +282,8 @@ def main() -> None:
     for name in names:
         if warm_times[name] > 0 \
                 and legacy_times[name] > 4 * warm_times[name]:
-            c2, lc2, w2, l2, b2, q2 = _time_query(spark, all_q[name],
-                                                  sf_dir, reps)
+            c2, lc2, w2, l2, b2, q2, _ = _time_query(
+                spark, all_q[name], sf_dir, reps)
             retried.append(name)
             quiesce[name] = round(quiesce[name] + q2, 1)
             if lc2 < legacy_times[name]:
@@ -296,7 +301,7 @@ def main() -> None:
         for name in SCALE_CURVE:
             if name not in all_q:
                 continue
-            small_cold, _, _, _, _, _ = _time_query(
+            small_cold, *_ = _time_query(
                 spark, all_q[name], SCALE_CURVE_SMALL_DIR, reps)
             curve[name] = {
                 "sf0.01_sec": small_cold,
@@ -560,6 +565,7 @@ def main() -> None:
               "per_query_load1": loads,
               "per_query_busy": busys,
               "per_query_quiesce_wait_sec": quiesce,
+              "per_query_cold_compiles": compiles,
               "per_part_sec": per_part}
     if native_sink:
         detail["native_sink"] = native_sink

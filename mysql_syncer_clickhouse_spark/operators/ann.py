@@ -809,14 +809,22 @@ def _round_ge_threshold(spark, eps: float, scale: int = 6) -> float:
     return flt(hi_b)
 
 
+# elements per row tile of the SemDeDup Arrow pair pass: each of the
+# pass's float64 tile arrays is at most 8 MB, whatever the cluster size
+_SEMDEDUP_TILE_ELEMS = 1 << 20
+
+
 def _semdedup_dups_arrow(scored: DataFrame, eps: float, keep: str,
-                         id_type: str) -> DataFrame:
+                         id_type: str,
+                         tile_elems: int = _SEMDEDUP_TILE_ELEMS
+                         ) -> DataFrame:
     """semdedup's pair stage as ONE numpy matrix pass per cluster
     (r16, guide §4.2): (id, dup_of) for every DROPPED member,
     bit-equal to _semdedup_dups_frame (forced in
     tests/test_semdedup_parity.py). The frame path evaluated the
     zip_with/aggregate dot fold per PAIR interpreted; here each
-    cluster ships once through Arrow and the pair dots are vectorized.
+    cluster ships once through Arrow and the pair dots are vectorized,
+    a tile of rows at a time (_semdedup_scan).
 
     Bit-parity contract, edge by edge:
     - dot: the per-dimension accumulation loop (P += q_d outer y_d in
@@ -840,55 +848,75 @@ def _semdedup_dups_arrow(scored: DataFrame, eps: float, keep: str,
       cosine's [-1, 1], so +inf collides with nothing) and forcing
       NaN pair dots to +inf (Spark: NaN >= eps is true).
     """
-    import numpy as np
-    import pandas as pd
-
     t = _round_ge_threshold(scored.sparkSession, eps)
-    far = keep == "far"
-    int64_max = np.iinfo(np.int64).max
+    src = scored.select("cid", "id", "q", "csim", "__qn",
+                        F.isnull("csim").alias("__cnull"))
+    return (src.groupBy("cid")
+               .applyInPandas(_semdedup_scan(t, keep == "far", tile_elems),
+                              f"id {id_type}, dup_of {id_type}"))
 
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
+
+def _semdedup_scan(t: float, far: bool, tile_elems: int):
+    """The Arrow pair pass's per-cluster function (one pandas frame of
+    cid, id, q, csim, __qn, __cnull in; id, dup_of out). Each x row's
+    answer reads only row x of the n x n pair matrices, so they are
+    built a tile of max(1, tile_elems // n) rows at a time: peak
+    memory is O(tile_elems) per array, not O(n^2), while every pair
+    dot keeps its per-dimension accumulation order."""
+
+    def scan(pdf):
+        import numpy as np
+        import pandas as pd
+        empty = pd.DataFrame({"id": pd.Series([], dtype="int64"),
+                              "dup_of": pd.Series([], dtype="int64")})
         # a NULL cid never matches itself in the frame path's equi-join
         # (NULL != NULL), but groupBy collects NULL cids into ONE group
         # -- such rows must not pair here either
         if pdf["cid"].isna().any():
-            return pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                                 "dup_of": pd.Series([], dtype="int64")})
+            return empty
         valid = (~pdf["__cnull"]).to_numpy()
         if valid.sum() < 2:
-            return pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                                 "dup_of": pd.Series([], dtype="int64")})
+            return empty
         ids = pdf["id"].to_numpy(dtype=np.int64)[valid]
         qn = pdf["__qn"].to_numpy(dtype=np.float64)[valid]
         csim = pdf["csim"].to_numpy(dtype=np.float64)[valid]
         csim = np.where(np.isnan(csim), np.inf, csim)   # NaN largest
         Q = np.stack(pdf["q"].to_numpy()[valid])
         n, dim = Q.shape
-        # pair dots, sequential over dimensions (the fold's IEEE order)
-        P = np.zeros((n, n))
-        tmp = np.empty((n, n))
-        for d in range(dim):
-            col = Q[:, d]
-            np.multiply(col[:, None], col[None, :], out=tmp)
-            P += tmp
-        C = P / np.multiply(qn[:, None], qn[None, :])
-        C[np.isnan(C)] = np.inf                         # NaN >= eps
-        # prio[x, y]: y strictly higher-priority than x
-        if far:
-            better = csim[None, :] < csim[:, None]
-        else:
-            better = csim[None, :] > csim[:, None]
-        prio = better | ((csim[None, :] == csim[:, None])
-                         & (ids[None, :] < ids[:, None]))
-        mask = prio & (C >= t)
-        any_x = mask.any(axis=1)
-        dup = np.where(mask, ids[None, :], int64_max).min(axis=1)
-        return pd.DataFrame({"id": ids[any_x], "dup_of": dup[any_x]})
+        rows = max(1, tile_elems // n)
+        int64_max = np.iinfo(np.int64).max
+        out_ids, out_dup = [], []
+        for lo in range(0, n, rows):
+            hi = min(lo + rows, n)
+            # pair dots, sequential over dimensions (the fold's IEEE
+            # order)
+            P = np.zeros((hi - lo, n))
+            tmp = np.empty((hi - lo, n))
+            for d in range(dim):
+                np.multiply(Q[lo:hi, d, None], Q[None, :, d], out=tmp)
+                P += tmp
+            del tmp
+            C = P / np.multiply(qn[lo:hi, None], qn[None, :])
+            del P
+            C[np.isnan(C)] = np.inf                     # NaN >= eps
+            # prio[x, y]: y strictly higher-priority than x
+            cx = csim[lo:hi, None]
+            if far:
+                better = csim[None, :] < cx
+            else:
+                better = csim[None, :] > cx
+            prio = better | ((csim[None, :] == cx)
+                             & (ids[None, :] < ids[lo:hi, None]))
+            mask = prio & (C >= t)
+            del C, better, prio
+            any_x = mask.any(axis=1)
+            dup = np.where(mask, ids[None, :], int64_max).min(axis=1)
+            out_ids.append(ids[lo:hi][any_x])
+            out_dup.append(dup[any_x])
+        return pd.DataFrame({"id": np.concatenate(out_ids),
+                             "dup_of": np.concatenate(out_dup)})
 
-    src = scored.select("cid", "id", "q", "csim", "__qn",
-                        F.isnull("csim").alias("__cnull"))
-    return (src.groupBy("cid")
-               .applyInPandas(scan, f"id {id_type}, dup_of {id_type}"))
+    return scan
 
 
 def embedding_decontaminate(train: DataFrame, bench: DataFrame, *,

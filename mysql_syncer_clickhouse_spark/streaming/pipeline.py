@@ -241,9 +241,11 @@ class StreamingSyncPipeline:
     def start_stream(self, stream: DataFrame, *,
                      processing_time: str | None = None) -> StreamingQuery:
         """Attach the apply loop to ANY streaming DataFrame in the
-        normalized changelog schema -- the parquet changelog source
-        below, sources/debezium.read_debezium_stream, or a real Kafka
-        reader all plug in here."""
+        normalized changelog schema -- the CLI's parquet changelog
+        stream (`__main__._changelog_frame`), the binlog decode,
+        sources/debezium.read_debezium_stream, or a real Kafka reader
+        all plug in here. Without `processing_time` it drains what is
+        available now, then stops."""
         writer = (stream.writeStream
                   .foreachBatch(self._apply_batch)
                   .option("checkpointLocation", self.checkpoint_dir)
@@ -253,22 +255,6 @@ class StreamingSyncPipeline:
         else:
             writer = writer.trigger(availableNow=True)
         return writer.start()
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 4,
-              processing_time: str | None = None) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        return self.start_stream(stream, processing_time=processing_time)
-
-    def run_available(self, spark: SparkSession, source_dir: str,
-                      schema: StructType, **kw) -> None:
-        """Drain everything currently in the source, then stop --
-        the batch-boundary analog of canal catch-up."""
-        q = self.start(spark, source_dir, schema, **kw)
-        q.awaitTermination()
 
     def current_state(self, spark: SparkSession) -> DataFrame:
         """Dedup-on-read view of the sink (ReplacingMergeTree SELECT

@@ -180,3 +180,72 @@ def test_session_without_jvm_takes_the_frame_pair_stage(spark,
         no_jvm = ann.semdedup(vecs, **kw).collect()
     assert _rows_key(no_jvm) == _rows_key(frame)
     assert any(not r["kept"] for r in no_jvm)          # non-trivial
+
+
+def _oversized_cluster_rows(n, dim, seed):
+    """One cluster of n members: noisy copies of n // 8 bases plus
+    exact repeats, so pair cosines land on both sides of eps and
+    priorities tie."""
+    import random
+    rng = random.Random(seed)
+    bases = [[rng.uniform(-1.0, 1.0) for _ in range(dim)]
+             for _ in range(max(1, n // 8))]
+    rows = []
+    for i in range(n):
+        b = bases[i % len(bases)]
+        if i % 5 == 0:
+            v = list(b)
+        else:
+            v = [x + rng.gauss(0.0, 0.05) for x in b]
+        rows.append((i, "big", v))
+    return rows
+
+
+def test_arrow_pair_stage_tiles_an_oversized_cluster(spark, monkeypatch):
+    """A cluster spread over many row tiles (a ragged last one
+    included) gives the frame fold's rows bit for bit."""
+    vecs = spark.createDataFrame(
+        _oversized_cluster_rows(301, 6, seed=11),
+        "vid long, grp string, emb array<double>")
+    arrow_pass = ann._semdedup_dups_arrow
+    with monkeypatch.context() as m:
+        # 1,000 elements per tile: 3 rows of 301 per tile, 101 tiles
+        m.setattr(ann, "_semdedup_dups_arrow",
+                  lambda scored, eps, keep, id_type:
+                  arrow_pass(scored, eps, keep, id_type, tile_elems=1000))
+        for keep in ("far", "near"):
+            tiled, frame = _semdedup_both(
+                vecs, monkeypatch, eps=0.98, keep=keep, cluster_col="grp",
+                id_col="vid", vec_col="emb")
+            assert _rows_key(tiled) == _rows_key(frame)
+            assert any(not r["kept"] for r in tiled)   # non-trivial
+
+
+def test_arrow_pair_pass_memory_is_bounded_by_the_tile():
+    """Peak memory of the per-cluster pass on a 4,000-member cluster
+    stays near the tile budget; one n x n float64 array alone would be
+    128 MB."""
+    import tracemalloc
+
+    import numpy as np
+    import pandas as pd
+
+    n, dim = 4000, 8
+    rows = _oversized_cluster_rows(n, dim, seed=5)
+    q = [np.floor(np.array(v) * 1_000_000) for _, _, v in rows]
+    qn = np.array([np.sqrt(float(np.dot(x, x))) for x in q])
+    cent = np.sum(q, axis=0)
+    csim = np.round(np.array([np.dot(x, cent) for x in q])
+                    / (qn * np.sqrt(np.dot(cent, cent))), 6)
+    pdf = pd.DataFrame({"cid": 0, "id": np.arange(n, dtype=np.int64),
+                        "q": q, "csim": csim, "__qn": qn,
+                        "__cnull": False})
+    scan = ann._semdedup_scan(0.98, True, ann._SEMDEDUP_TILE_ELEMS)
+    tracemalloc.start()
+    try:
+        out = scan(pdf)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(out) > 0
+    assert peak < 64 * 2**20, f"peak {peak / 2**20:.1f} MB"

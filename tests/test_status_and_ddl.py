@@ -48,7 +48,7 @@ def test_stat_serves_live_position_advancing_across_epochs(spark, tmp_path):
     from mysql_syncer_clickhouse_spark.streaming.pipeline import (
         StreamingSyncPipeline)
     from tests.test_streaming import (
-        ROWS_PART1, ROWS_PART2, SCHEMA_DDL, _write_part)
+        ROWS_PART1, ROWS_PART2, SCHEMA_DDL, _drain, _write_part)
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -67,11 +67,11 @@ def test_stat_serves_live_position_advancing_across_epochs(spark, tmp_path):
 
         assert "position" not in stat()          # nothing applied yet
         _write_part(spark, src, ROWS_PART1, "p1")
-        pipe.run_available(spark, src, schema)
+        _drain(pipe, spark, src, schema)
         s1 = stat()
         assert s1["position"]["applied_seq"] == 3
         _write_part(spark, src, ROWS_PART2, "p2")
-        pipe.run_available(spark, src, schema)   # resume, next epoch
+        _drain(pipe, spark, src, schema)   # resume, next epoch
         s2 = stat()
         assert s2["position"]["applied_seq"] == 6
         assert s2["position"]["applied_epoch"] > s1["position"]["applied_epoch"]
@@ -284,6 +284,7 @@ def test_stat_serves_replication_lag(spark, tmp_path):
     from mysql_syncer_clickhouse_spark.plans.rules import Rule
     from mysql_syncer_clickhouse_spark.streaming.pipeline import (
         StreamingSyncPipeline)
+    from tests.test_streaming import _drain
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -305,7 +306,7 @@ def test_stat_serves_replication_lag(spark, tmp_path):
         with urllib.request.urlopen(
                 f"http://127.0.0.1:{srv.port}/stat", timeout=5) as r:
             assert "lag" not in json.loads(r.read())
-        pipe.run_available(spark, src, df.schema)
+        _drain(pipe, spark, src, df.schema)
         with urllib.request.urlopen(
                 f"http://127.0.0.1:{srv.port}/stat", timeout=5) as r:
             lag = json.loads(r.read())["lag"]

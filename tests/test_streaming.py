@@ -62,6 +62,15 @@ def _schema(spark):
     return spark.createDataFrame([], SCHEMA_DDL).schema
 
 
+def _drain(pipe, spark, src, schema):
+    """Drain every changelog file now in `src` through `pipe`, four
+    files per epoch, then stop -- the batch-boundary analog of canal
+    catch-up."""
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 4).parquet(src))
+    pipe.start_stream(stream).awaitTermination()
+
+
 def _sidecar(sink):
     with open(os.path.join(sink, SINK_SCHEMA_FILE)) as fh:
         return StructType.fromJson(json.load(fh))
@@ -98,7 +107,7 @@ def test_stream_apply_and_state(spark, dirs):
     src, sink, ckpt = dirs
     _write_part(spark, src, ROWS_PART1, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     state = {r["id"]: r["es_title"]
              for r in pipe.current_state(spark).collect()}
     assert state == {1: "first-edited", 2: "second"}
@@ -113,11 +122,11 @@ def test_kill_resume_no_loss_no_dup(spark, dirs):
     src, sink, ckpt = dirs
     _write_part(spark, src, ROWS_PART1, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))   # "kill" after drain
+    _drain(pipe, spark, src, _schema(spark))   # "kill" after drain
 
     _write_part(spark, src, ROWS_PART2, "p2")
     pipe2 = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)  # resume
-    pipe2.run_available(spark, src, _schema(spark))
+    _drain(pipe2, spark, src, _schema(spark))
 
     state = {r["id"]: r["es_title"]
              for r in pipe2.current_state(spark).collect()}
@@ -133,7 +142,7 @@ def test_compact_preserves_state(spark, dirs):
     _write_part(spark, src, ROWS_PART1, "p1")
     _write_part(spark, src, ROWS_PART2, "p2")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     before = {(r["id"], r["es_title"])
               for r in pipe.current_state(spark).collect()}
     pipe.compact(spark)
@@ -153,15 +162,15 @@ def test_schema_evolution_add_drop_column(spark, dirs):
     src, sink, ckpt = dirs
     _write_part(spark, src, ROWS_PART1, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
 
     v2_ddl = "seq long, op string, id long, title string, extra string"
     rows_v2 = [(4, "insert", 4, "fourth", "bonus"),
                (5, "update", 1, "first-v2", "patched")]
     _write_part(spark, src, rows_v2, "p2", schema=v2_ddl)
     pipe2 = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe2.run_available(spark, src,
-                        spark.createDataFrame([], v2_ddl).schema)
+    _drain(pipe2, spark, src,
+           spark.createDataFrame([], v2_ddl).schema)
 
     # the sidecar holds the union: reading through it submits no
     # schema job before the action
@@ -192,7 +201,7 @@ def test_legacy_sink_without_sidecar_reads_merged_then_gains_one(
     src, sink, ckpt = dirs
     _write_part(spark, src, ROWS_PART1, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     os.remove(os.path.join(sink, SINK_SCHEMA_FILE))
     state, jobs = _jobs_in_group(spark, lambda: pipe.current_state(spark))
     assert jobs
@@ -203,8 +212,8 @@ def test_legacy_sink_without_sidecar_reads_merged_then_gains_one(
     _write_part(spark, src, [(4, "insert", 4, "fourth", "bonus")], "p2",
                 schema=v2_ddl)
     pipe2 = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe2.run_available(spark, src,
-                        spark.createDataFrame([], v2_ddl).schema)
+    _drain(pipe2, spark, src,
+           spark.createDataFrame([], v2_ddl).schema)
     assert set(_sidecar(sink).fieldNames()) == \
         {"seq", "op", "id", "es_title", "mydate", "extra"}
     _assert_same_frame(spark.read.schema(_sidecar(sink)).parquet(sink),
@@ -225,12 +234,12 @@ def test_same_name_type_change_drops_sidecar(spark, dirs):
     src, sink, ckpt = dirs
     _write_part(spark, src, ROWS_PART1, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     v2_ddl = "seq long, op string, id long, title string, mydate string"
     _write_part(spark, src, [(4, "insert", 4, "fourth", "soon")], "p2",
                 schema=v2_ddl)
-    pipe.run_available(spark, src,
-                       spark.createDataFrame([], v2_ddl).schema)
+    _drain(pipe, spark, src,
+           spark.createDataFrame([], v2_ddl).schema)
     assert not os.path.exists(os.path.join(sink, SINK_SCHEMA_FILE))
     with pytest.raises(Exception, match="CANNOT_MERGE"):
         pipe.current_state(spark).collect()
@@ -238,8 +247,8 @@ def test_same_name_type_change_drops_sidecar(spark, dirs):
     # it still appends, as the writer always did
     _write_part(spark, src, [(5, "insert", 5, "fifth", "later")], "p3",
                 schema=v2_ddl)
-    pipe.run_available(spark, src,
-                       spark.createDataFrame([], v2_ddl).schema)
+    _drain(pipe, spark, src,
+           spark.createDataFrame([], v2_ddl).schema)
     assert not os.path.exists(os.path.join(sink, SINK_SCHEMA_FILE))
     assert spark.read.schema("seq long").parquet(sink).count() == 5
 
@@ -252,7 +261,7 @@ def test_sidecar_ahead_of_data_reads_right(spark, dirs):
     src, sink, ckpt = dirs
     _write_part(spark, src, ROWS_PART1, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
 
     v2_ddl = "seq long, op string, id long, title string, extra string"
     v2 = spark.createDataFrame([], v2_ddl).schema
@@ -267,14 +276,14 @@ def test_sidecar_ahead_of_data_reads_right(spark, dirs):
 
     crashing._merge_sink_schema = merge_then_crash
     with pytest.raises(Exception, match="crash between"):
-        crashing.run_available(spark, src, v2)
+        _drain(crashing, spark, src, v2)
     assert "extra" in _sidecar(sink).fieldNames()
     assert {r["id"]: (r["es_title"], r["extra"])
             for r in pipe.current_state(spark).collect()} == {
         1: ("first-edited", None), 2: ("second", None)}
 
     resumed = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    resumed.run_available(spark, src, v2)
+    _drain(resumed, spark, src, v2)
     assert {r["id"]: (r["es_title"], r["extra"])
             for r in resumed.current_state(spark).collect()} == {
         1: ("first-edited", None), 2: ("second", None),
@@ -321,7 +330,7 @@ def test_partitioned_sink_prunes_and_preserves_state(spark, dirs):
     _write_part(spark, src, ROWS_PART2, "p2")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt,
                                  partition_cols=("op",))
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
 
     state = {r["id"]: r["es_title"]
              for r in pipe.current_state(spark).collect()}
@@ -350,7 +359,7 @@ def test_compact_leaves_a_valid_sidecar(spark, dirs):
     _write_part(spark, src, ROWS_PART2, "p2")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt,
                                  partition_cols=("op",))
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     before = {r["id"]: r["es_title"]
               for r in pipe.current_state(spark).collect()}
     pipe.compact(spark)
@@ -545,7 +554,7 @@ def test_orc_sink_format_same_semantics(spark, dirs):
     _write_part(spark, src, ROWS_PART1 + ROWS_PART2, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt,
                                  sink_format="orc")
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     state = {r["id"]: r["es_title"]
              for r in pipe.current_state(spark).collect()}
     assert state == {1: "first-edited", 3: "third-edited"}
@@ -570,7 +579,7 @@ def test_compact_with_ttl_drops_expired_rows(spark, dirs):
     _write_part(spark, src, ROWS_PART1, "p1")
     _write_part(spark, src, ROWS_PART2, "p2")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     # live state pre-TTL: id1 (mydate 86400), id3 (172800); id2 deleted
     pre = {r["id"] for r in pipe.current_state(spark).collect()}
     assert pre == {1, 3}
@@ -592,7 +601,7 @@ def test_compact_ttl_keeps_null_ttl_rows(spark, dirs):
             (2, "insert", 2, "undated", None)]
     _write_part(spark, src, rows, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
     pipe.compact(spark, ttl_col="mydate", ttl_expire_before=10**9)
     assert {r["id"] for r in pipe.current_state(spark).collect()} == {2}
 
@@ -609,7 +618,7 @@ def test_compact_sorts_by_pk_for_file_pruning(spark, dirs, tmp_path):
     rows = [(i, "insert", i, f"t{i}", 86400) for i in range(1, 401)]
     _write_part(spark, src, rows, "p1")
     pipe = StreamingSyncPipeline(_rule(), ["id"], sink, ckpt)
-    pipe.run_available(spark, src, _schema(spark))
+    _drain(pipe, spark, src, _schema(spark))
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -816,8 +825,7 @@ def test_compact_ttl_group_by_rollup(spark, dirs):
                 sink_schema="olap", sink_table="items_sink",
                 pk=("grp", "id"))
     pipe = StreamingSyncPipeline(rule, ["grp", "id"], sink, ckpt)
-    pipe.run_available(
-        spark, src, spark.createDataFrame([], schema).schema)
+    _drain(pipe, spark, src, spark.createDataFrame([], schema).schema)
 
     pipe.compact(spark, ttl_col="mydate", ttl_expire_before=1000,
                  ttl_rollup_group=["grp"],
