@@ -810,7 +810,8 @@ def _round_ge_threshold(spark, eps: float, scale: int = 6) -> float:
 
 
 # elements per row tile of the SemDeDup Arrow pair pass: each of the
-# pass's float64 tile arrays is at most 8 MB, whatever the cluster size
+# pass's float64 tile arrays is at most 8 MB for any cluster of up to
+# a million members (a tile is never less than one row)
 _SEMDEDUP_TILE_ELEMS = 1 << 20
 
 
@@ -888,16 +889,13 @@ def _semdedup_scan(t: float, far: bool, tile_elems: int):
         out_ids, out_dup = [], []
         for lo in range(0, n, rows):
             hi = min(lo + rows, n)
-            # pair dots, sequential over dimensions (the fold's IEEE
-            # order)
+            # pair dots, sequential over dimensions (the fold's IEEE order)
             P = np.zeros((hi - lo, n))
             tmp = np.empty((hi - lo, n))
             for d in range(dim):
                 np.multiply(Q[lo:hi, d, None], Q[None, :, d], out=tmp)
                 P += tmp
-            del tmp
             C = P / np.multiply(qn[lo:hi, None], qn[None, :])
-            del P
             C[np.isnan(C)] = np.inf                     # NaN >= eps
             # prio[x, y]: y strictly higher-priority than x
             cx = csim[lo:hi, None]
@@ -908,7 +906,6 @@ def _semdedup_scan(t: float, far: bool, tile_elems: int):
             prio = better | ((csim[None, :] == cx)
                              & (ids[None, :] < ids[lo:hi, None]))
             mask = prio & (C >= t)
-            del C, better, prio
             any_x = mask.any(axis=1)
             dup = np.where(mask, ids[None, :], int64_max).min(axis=1)
             out_ids.append(ids[lo:hi][any_x])

@@ -13,11 +13,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-# Spark's generated-class cache (a static SQL conf: it is read once per
-# JVM, when the first query is compiled). See get_spark.
-CODEGEN_CACHE_ENTRIES = 2000
-
-
 def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -29,26 +24,25 @@ def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
     `local[8]` beat `local[32]` on the merged entries. Plans are
     partition-count independent; only scheduling overhead changes.
 
-    `spark.sql.codegen.cache.maxEntries` is CODEGEN_CACHE_ENTRIES
-    (2,000; Spark's default is 100). The cache maps generated source
-    to its Janino-compiled class and evicts the least recently used
-    entry. Re-planning the same query yields the same source, so a
-    cache that holds the working set compiles each class once. One
-    that is smaller than a cyclic working set hits 0%: each class is
-    evicted just before it is asked for again. Working sets measured
-    at sf0.001 (distinct classes, counted by Spark's CodegenMetrics):
-    about 206 per sweep of the analytics mix (cdc_op_counters,
-    dedup_minhash_lsh, cdc_final_state), 94 per sync drain plus its
-    dedup-on-read queries, 1,376 per pass over the whole registry.
-    At 100 the sweep recompiled everything: 927-938 Janino compiles
-    per perfbench analytics run, and a second registry pass
-    recompiled 1,764 classes. At 2,000 those fell to 220-232 and 127,
-    and job CPU per analytics sweep fell 22%. 2,000 is the smallest
-    round figure above the largest set (the registry's), with room
-    for plans that differ by literal or schema; a larger cache buys
-    no hits for these sets and only lets dead classes pin Metaspace
-    longer. Metaspace after two registry passes read 205 MB, against
-    220 MB at 100 entries (fewer classes loaded twice)."""
+    `spark.sql.codegen.cache.maxEntries` is 2,000 (Spark's default is
+    100). It is a static conf, read once per JVM. The cache maps
+    generated source to its Janino-compiled class and evicts the least
+    recently used entry. Re-planning a query yields the same source,
+    so a cache that holds the working set compiles each class once;
+    one smaller than a working set visited in the same order every
+    time hits 0%, each class evicted just before it is asked for
+    again. Working sets measured at sf0.001 size (distinct classes,
+    Spark's CodegenMetrics): about 209 per sweep of the
+    perfbench analytics mix (cdc_op_counters, dedup_minhash_lsh,
+    cdc_final_state), 94 per perfbench sync_delta_read run, 1,372 per
+    pass over the whole registry. At 100 entries an analytics run made
+    937-946 Janino compiles and a second registry pass 1,791-1,797; at
+    2,000, 224-230 and 114-148, and job CPU per analytics sweep fell
+    17%. 2,000 is the round figure above the largest of these sets
+    (the registry's), with room for plans that differ by a literal. It
+    is not larger because no measured set needs more and every cached
+    class stays loaded: after two registry passes and a full GC,
+    Metaspace held 195 MB against 184 MB at 100 entries."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
@@ -64,8 +58,7 @@ def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.codegen.cache.maxEntries",
-                str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()
     )
