@@ -282,14 +282,17 @@ def main() -> None:
     for name in names:
         if warm_times[name] > 0 \
                 and legacy_times[name] > 4 * warm_times[name]:
-            c2, lc2, w2, l2, b2, q2, _ = _time_query(
+            c2, lc2, w2, l2, b2, q2, k2 = _time_query(
                 spark, all_q[name], sf_dir, reps)
             retried.append(name)
             quiesce[name] = round(quiesce[name] + q2, 1)
             if lc2 < legacy_times[name]:
                 legacy_times[name], loads[name] = lc2, l2
                 busys[name] = b2
-            cold_times[name] = min(cold_times[name], c2)
+            if c2 < cold_times[name]:
+                # the compile count describes the run that gave the
+                # cold time beside it
+                cold_times[name], compiles[name] = c2, k2
             warm_times[name] = min(warm_times[name], w2)
     cal_end = _time_query(spark, _calibration, sf_dir, reps)
 

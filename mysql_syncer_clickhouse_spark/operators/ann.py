@@ -816,9 +816,7 @@ _SEMDEDUP_TILE_ELEMS = 1 << 20
 
 
 def _semdedup_dups_arrow(scored: DataFrame, eps: float, keep: str,
-                         id_type: str,
-                         tile_elems: int = _SEMDEDUP_TILE_ELEMS
-                         ) -> DataFrame:
+                         id_type: str) -> DataFrame:
     """semdedup's pair stage as ONE numpy matrix pass per cluster
     (r16, guide §4.2): (id, dup_of) for every DROPPED member,
     bit-equal to _semdedup_dups_frame (forced in
@@ -853,17 +851,17 @@ def _semdedup_dups_arrow(scored: DataFrame, eps: float, keep: str,
     src = scored.select("cid", "id", "q", "csim", "__qn",
                         F.isnull("csim").alias("__cnull"))
     return (src.groupBy("cid")
-               .applyInPandas(_semdedup_scan(t, keep == "far", tile_elems),
+               .applyInPandas(_semdedup_scan(t, keep == "far"),
                               f"id {id_type}, dup_of {id_type}"))
 
 
-def _semdedup_scan(t: float, far: bool, tile_elems: int):
+def _semdedup_scan(t: float, far: bool):
     """The Arrow pair pass's per-cluster function (one pandas frame of
     cid, id, q, csim, __qn, __cnull in; id, dup_of out). Each x row's
     answer reads only row x of the n x n pair matrices, so they are
-    built a tile of max(1, tile_elems // n) rows at a time: peak
-    memory is O(tile_elems) per array, not O(n^2), while every pair
-    dot keeps its per-dimension accumulation order."""
+    built a tile of max(1, _SEMDEDUP_TILE_ELEMS // n) rows at a time:
+    peak memory is O(_SEMDEDUP_TILE_ELEMS) per array, not O(n^2),
+    while every pair dot keeps its per-dimension accumulation order."""
 
     def scan(pdf):
         import numpy as np
@@ -884,7 +882,7 @@ def _semdedup_scan(t: float, far: bool, tile_elems: int):
         csim = np.where(np.isnan(csim), np.inf, csim)   # NaN largest
         Q = np.stack(pdf["q"].to_numpy()[valid])
         n, dim = Q.shape
-        rows = max(1, tile_elems // n)
+        rows = max(1, _SEMDEDUP_TILE_ELEMS // n)
         int64_max = np.iinfo(np.int64).max
         out_ids, out_dup = [], []
         for lo in range(0, n, rows):

@@ -207,12 +207,9 @@ def test_arrow_pair_stage_tiles_an_oversized_cluster(spark, monkeypatch):
     vecs = spark.createDataFrame(
         _oversized_cluster_rows(301, 6, seed=11),
         "vid long, grp string, emb array<double>")
-    arrow_pass = ann._semdedup_dups_arrow
     with monkeypatch.context() as m:
         # 1,000 elements per tile: 3 rows of 301 per tile, 101 tiles
-        m.setattr(ann, "_semdedup_dups_arrow",
-                  lambda scored, eps, keep, id_type:
-                  arrow_pass(scored, eps, keep, id_type, tile_elems=1000))
+        m.setattr(ann, "_SEMDEDUP_TILE_ELEMS", 1000)
         for keep in ("far", "near"):
             tiled, frame = _semdedup_both(
                 vecs, monkeypatch, eps=0.98, keep=keep, cluster_col="grp",
@@ -240,7 +237,7 @@ def test_arrow_pair_pass_memory_is_bounded_by_the_tile():
     pdf = pd.DataFrame({"cid": 0, "id": np.arange(n, dtype=np.int64),
                         "q": q, "csim": csim, "__qn": qn,
                         "__cnull": False})
-    scan = ann._semdedup_scan(0.98, True, ann._SEMDEDUP_TILE_ELEMS)
+    scan = ann._semdedup_scan(0.98, True)
     tracemalloc.start()
     try:
         out = scan(pdf)
