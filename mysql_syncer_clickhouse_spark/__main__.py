@@ -33,7 +33,7 @@ import sys
 
 from .config import EngineConfig
 from .session import get_spark
-from .streaming.pipeline import StreamingSyncPipeline
+from .streaming.pipeline import StreamingSyncPipeline, start_stream
 
 
 class _AggregatedMetrics:
@@ -205,7 +205,8 @@ def _drain_rule(cfg: EngineConfig, spark, rule, changelog, *,
     if not changelog.isStreaming:
         pipe._apply_batch(changelog, epoch_id=-1)
     else:
-        q = pipe.start_stream(changelog, **cfg.trigger_kwargs(follow))
+        q = start_stream(changelog, pipe._apply_batch, pipe.checkpoint_dir,
+                         **cfg.trigger_kwargs(follow))
         if follow:
             results.append({"rule": rule.key, "mode": "following"})
             return True

@@ -75,15 +75,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                    F.count(F.lit(1)).alias("n_copies")))
 
 
-def shingle_set(df: DataFrame, id_col: str, text_col: str,
-                k: int = 8) -> DataFrame:
-    """Distinct character k-shingles per document (set semantics for
-    Jaccard)."""
-    return (df.select(F.col(id_col).alias("id"),
-                      F.explode(char_shingles(text_col, k)).alias("shingle"))
-              .distinct())
-
-
 def hashed_shingle_set(df: DataFrame, id_col: str, text_col: str,
                        k: int = 8) -> DataFrame:
     """Distinct (id, h32) pairs: 32-bit portable hashes of character
@@ -112,6 +103,10 @@ def minhash_signatures(hashed: DataFrame) -> DataFrame:
     mod P. Exact int64 arithmetic -- a*H < 2^53 -- identical on any
     engine. Input is (id, h32) from hashed_shingle_set.
 
+    The package bands through fused_doc_profile + fused_band_rows;
+    this unfused block is the test oracle those are checked against
+    (test_minhash_fused_matches_unfused_blocks).
+
     All len(MINHASH_PARAMS) minhashes are computed as aggregates of ONE
     groupBy(id) pass (map-side partial min per hash), instead of
     fanning each shingle out len(params)x through a params join -- at
@@ -129,7 +124,8 @@ def minhash_signatures(hashed: DataFrame) -> DataFrame:
 
 
 def lsh_band_signatures(sigs: DataFrame) -> DataFrame:
-    """Pack each band of BANDS_OF minhashes into one long (exact)."""
+    """Pack each band of BANDS_OF minhashes into one long (exact).
+    Like minhash_signatures, the test oracle of fused_band_rows."""
     packed = F.when(F.col("i") % BANDS_OF == 0,
                     F.col("mh") * _BAND_SHIFT).otherwise(F.col("mh"))
     return (sigs.withColumn("band", F.floor(F.col("i") / BANDS_OF))
@@ -389,8 +385,8 @@ def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
     shuffle) is declared ONCE, and band signatures come from flat
     column arithmetic over the wide row -- no (id, band) shuffle.
     Compared to the unfused building blocks (minhash_signatures +
-    lsh_band_signatures + jaccard_verify, kept above for direct use
-    and tests) that drops two doc-grain shuffles.
+    lsh_band_signatures + jaccard_verify, kept above as the test
+    oracle of this plan) that drops two doc-grain shuffles.
 
     Deliberately NO persist: Catalyst prunes the aggregate per branch
     (the band branch aggregates only the 8 mins, each verify side only

@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package, for the Python workers' sys.path
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
               cpus: int | None = None,
@@ -45,7 +48,13 @@ def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
     Metaspace held 195 MB against 184 MB at 100 entries. A smaller
     cache that still holds the registry's set saves none of that (at
     1,500 entries: the same compiles, the same 195 MB), since the cost
-    is the classes kept, not the cache's size."""
+    is the classes kept, not the cache's size.
+
+    `spark.executorEnv.PYTHONPATH` is the directory that holds this
+    package. Python UDFs pickle some package functions by reference,
+    so a worker must be able to import the package; Spark joins this
+    entry with the PYTHONPATH of the process that built the session,
+    so a session built from any directory works."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
@@ -62,6 +71,7 @@ def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()
     )

@@ -214,17 +214,3 @@ class ClickHouseHTTPSink:
         self.write_stats["rows_written"] += rows_acc.value
         self.write_stats["conn_wall_us"] += wall_acc.value
         self.write_stats["epochs"] += 1
-
-    def attach(self, stream: DataFrame, checkpoint_dir: str,
-               ensure: bool = True):
-        """Wire a streaming DataFrame to this sink: auto-CREATE first
-        (as the reference does at startup), then start the foreachBatch
-        apply loop with availableNow draining."""
-        if ensure:
-            self.ensure_table()
-        return (stream.writeStream
-                .foreachBatch(self.apply_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start())

@@ -1421,14 +1421,3 @@ class ClickHouseNativeSink:
         self.write_stats["rows_written"] += rows_acc.value
         self.write_stats["conn_wall_us"] += wall_acc.value
         self.write_stats["epochs"] += 1
-
-    def attach(self, stream: DataFrame, checkpoint_dir: str,
-               ensure: bool = True):
-        if ensure:
-            self.ensure_table()
-        return (stream.writeStream
-                .foreachBatch(self.apply_batch)
-                .option("checkpointLocation", checkpoint_dir)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start())

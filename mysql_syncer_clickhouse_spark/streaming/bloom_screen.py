@@ -46,11 +46,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..functions import text as TX
 from ..operators import bloom
+from .pipeline import write_epoch_partition
 
 
 @dataclass
@@ -111,10 +110,7 @@ class BloomIngestPipeline:
                     .drop("might_contain"))
         kept = kept.localCheckpoint(eager=True)
 
-        (kept.drop("fp").withColumn("epoch", F.lit(epoch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("epoch").parquet(self.sink_dir))
+        write_epoch_partition(kept.drop("fp"), epoch_id, self.sink_dir)
         (bloom.bloom_build(kept, "fp", m=self.m_bits, k=self.k_hashes)
               .withColumn("epoch", F.lit(epoch_id))
               .write.mode("append").parquet(self.state_dir))
@@ -124,28 +120,6 @@ class BloomIngestPipeline:
         self.metrics.kept += n_kept
         self.metrics.dropped_seen += n_in - n_kept
         self.metrics.epochs += 1
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 1,
-              processing_time: str | None = None) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        writer = (stream.writeStream
-                  .foreachBatch(self._apply_batch)
-                  .option("checkpointLocation", self.checkpoint_dir)
-                  .outputMode("append"))
-        if processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def run_available(self, spark: SparkSession, source_dir: str,
-                      schema: StructType, **kw) -> None:
-        q = self.start(spark, source_dir, schema, **kw)
-        q.awaitTermination()
 
     def corpus(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.sink_dir)

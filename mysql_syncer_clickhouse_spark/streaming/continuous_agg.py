@@ -26,10 +26,44 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 _DEC = "decimal(38,6)"
+
+
+@dataclass
+class PartialsRollup:
+    """The shape every continuous aggregate below shares: each epoch
+    appends its `_partials` (rows tagged with the epoch id) to the
+    sink, the subclass's `read` merges them, and `compact` rewrites
+    the sink as the subclass's `_compacted` relation tagged epoch -1.
+    Drive it with streaming.pipeline.start_stream(stream,
+    agg._apply_batch, agg.checkpoint_dir)."""
+    ts_col: str
+    window_duration: str                 # e.g. "1 hour"
+    key_cols: Sequence[str]
+    value_col: str
+    sink_dir: str
+    checkpoint_dir: str
+
+    def _partials(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        raise NotImplementedError
+
+    def _compacted(self, spark: SparkSession) -> DataFrame:
+        raise NotImplementedError
+
+    def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        self._partials(batch_df, epoch_id) \
+            .write.mode("append").parquet(self.sink_dir)
+
+    def compact(self, spark: SparkSession) -> None:
+        """Write the compacted relation to `<sink>.compact`, read it
+        back, overwrite the sink: the relation reads the sink, so it
+        cannot overwrite it directly."""
+        tmp = self.sink_dir.rstrip("/") + ".compact"
+        self._compacted(spark).withColumn("epoch", F.lit(-1)) \
+            .write.mode("overwrite").parquet(tmp)
+        spark.read.parquet(tmp).write.mode("overwrite") \
+            .parquet(self.sink_dir)
 
 
 def merge_partials(partials: DataFrame,
@@ -49,13 +83,8 @@ def merge_partials(partials: DataFrame,
 
 
 @dataclass
-class ContinuousAggregate:
-    ts_col: str
-    window_duration: str                 # e.g. "1 hour"
-    key_cols: Sequence[str]
-    value_col: str
-    sink_dir: str
-    checkpoint_dir: str
+class ContinuousAggregate(PartialsRollup):
+    """COUNT and decimal SUM of `value_col` per (time bucket, keys)."""
 
     def _partials(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         return (batch_df
@@ -68,39 +97,17 @@ class ContinuousAggregate:
                         *self.key_cols, "part_n", "part_sum",
                         F.lit(epoch_id).alias("epoch")))
 
-    def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._partials(batch_df, epoch_id) \
-            .write.mode("append").parquet(self.sink_dir)
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 4) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        return (stream.writeStream
-                .foreachBatch(self._apply_batch)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start())
-
     def read(self, spark: SparkSession) -> DataFrame:
         """Merged rollup: dedup replayed epochs, then sum partials."""
         return merge_partials(spark.read.parquet(self.sink_dir),
                               self.key_cols)
 
-    def compact(self, spark: SparkSession) -> None:
-        """Fold all partials into one row per bucket (epoch -1)."""
-        state = self.read(spark).select(
+    def _compacted(self, spark: SparkSession) -> DataFrame:
+        """All partials folded into one row per bucket."""
+        return self.read(spark).select(
             "win_start", *self.key_cols,
             F.col("n").alias("part_n"),
-            F.col("total").cast(_DEC).alias("part_sum"),
-            F.lit(-1).alias("epoch"))
-        tmp = self.sink_dir.rstrip("/") + ".compact"
-        state.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite") \
-            .parquet(self.sink_dir)
+            F.col("total").cast(_DEC).alias("part_sum"))
 
 
 def merge_bitmap_partials(partials: DataFrame,
@@ -118,7 +125,7 @@ def merge_bitmap_partials(partials: DataFrame,
 
 
 @dataclass
-class DistinctContinuousAggregate:
+class DistinctContinuousAggregate(PartialsRollup):
     """Incrementally-maintained exact COUNT(DISTINCT value) per
     (time bucket, keys): the AggregatingMergeTree + groupBitmapState
     pattern (ClickHouse's materialized-view recipe for distinct
@@ -130,12 +137,6 @@ class DistinctContinuousAggregate:
     word-grain, and a COUNT(DISTINCT) over billions of raw events
     never has to re-shuffle history. The value domain can be any long
     (the word/bit mapping is injective for all 64-bit values)."""
-    ts_col: str
-    window_duration: str
-    key_cols: Sequence[str]
-    value_col: str
-    sink_dir: str
-    checkpoint_dir: str
 
     def _partials(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
         from ..operators.bitmap import bitmap_agg
@@ -148,39 +149,17 @@ class DistinctContinuousAggregate:
                            self.value_col)
                 .withColumn("epoch", F.lit(epoch_id)))
 
-    def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._partials(batch_df, epoch_id) \
-            .write.mode("append").parquet(self.sink_dir)
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 4) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        return (stream.writeStream
-                .foreachBatch(self._apply_batch)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start())
-
     def read(self, spark: SparkSession) -> DataFrame:
         return merge_bitmap_partials(spark.read.parquet(self.sink_dir),
                                      self.key_cols)
 
-    def compact(self, spark: SparkSession) -> None:
-        """Fold all word rows into one OR-merged set (epoch -1) --
-        changes nothing downstream (OR idempotence), shrinks state to
-        one row per (bucket, word)."""
-        state = (spark.read.parquet(self.sink_dir)
-                 .groupBy("win_start", *self.key_cols, "word")
-                 .agg(F.bit_or("bits").alias("bits"))
-                 .withColumn("epoch", F.lit(-1)))
-        tmp = self.sink_dir.rstrip("/") + ".compact"
-        state.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite") \
-            .parquet(self.sink_dir)
+    def _compacted(self, spark: SparkSession) -> DataFrame:
+        """All word rows folded into one OR-merged set -- changes
+        nothing downstream (OR idempotence), shrinks state to one row
+        per (bucket, word)."""
+        return (spark.read.parquet(self.sink_dir)
+                .groupBy("win_start", *self.key_cols, "word")
+                .agg(F.bit_or("bits").alias("bits")))
 
 
 def merge_hll_partials(partials: DataFrame,
@@ -197,7 +176,7 @@ def merge_hll_partials(partials: DataFrame,
 
 
 @dataclass
-class HllContinuousAggregate:
+class HllContinuousAggregate(PartialsRollup):
     """Approximate COUNT(DISTINCT) continuous aggregate: the
     uniqState / uniqMerge AggregatingMergeTree pattern with Spark's
     DataSketches HLL binary state.
@@ -209,12 +188,6 @@ class HllContinuousAggregate:
     standard ~1-2% relative error. Same append-only replay contract:
     hll_union is idempotent and associative, so replays and
     compactions never change an estimate's inputs."""
-    ts_col: str
-    window_duration: str
-    key_cols: Sequence[str]
-    value_col: str
-    sink_dir: str
-    checkpoint_dir: str
     lgk: int = 12                       # log2 registers, Spark default
 
     def _partials(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
@@ -227,37 +200,15 @@ class HllContinuousAggregate:
                         *self.key_cols, "sketch",
                         F.lit(epoch_id).alias("epoch")))
 
-    def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._partials(batch_df, epoch_id) \
-            .write.mode("append").parquet(self.sink_dir)
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 4) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        return (stream.writeStream
-                .foreachBatch(self._apply_batch)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start())
-
     def read(self, spark: SparkSession) -> DataFrame:
         return merge_hll_partials(spark.read.parquet(self.sink_dir),
                                   self.key_cols)
 
-    def compact(self, spark: SparkSession) -> None:
-        """Union all sketches per bucket into one row (epoch -1)."""
-        state = (spark.read.parquet(self.sink_dir)
-                 .groupBy("win_start", *self.key_cols)
-                 .agg(F.hll_union_agg("sketch").alias("sketch"))
-                 .withColumn("epoch", F.lit(-1)))
-        tmp = self.sink_dir.rstrip("/") + ".compact"
-        state.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite") \
-            .parquet(self.sink_dir)
+    def _compacted(self, spark: SparkSession) -> DataFrame:
+        """All sketches of a bucket unioned into one row."""
+        return (spark.read.parquet(self.sink_dir)
+                .groupBy("win_start", *self.key_cols)
+                .agg(F.hll_union_agg("sketch").alias("sketch")))
 
 
 def merge_theta_partials(partials: DataFrame,
@@ -276,7 +227,7 @@ def merge_theta_partials(partials: DataFrame,
 
 
 @dataclass
-class ThetaContinuousAggregate:
+class ThetaContinuousAggregate(PartialsRollup):
     """Approximate COUNT(DISTINCT) continuous aggregate on the
     repo-owned theta/KMV sketch (operators/sketch.py) -- the third
     point in the uniqState/uniqMerge family next to the exact bitmap
@@ -289,12 +240,6 @@ class ThetaContinuousAggregate:
     Same append-only replay contract: elementwise min is idempotent
     and associative, so replays and compactions never change an
     estimate's inputs."""
-    ts_col: str
-    window_duration: str
-    key_cols: Sequence[str]
-    value_col: str
-    sink_dir: str
-    checkpoint_dir: str
     k: int = 1024
 
     def _partials(self, batch_df: DataFrame, epoch_id: int) -> DataFrame:
@@ -307,34 +252,13 @@ class ThetaContinuousAggregate:
                              self.value_col, k=self.k)
                 .withColumn("epoch", F.lit(epoch_id)))
 
-    def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        self._partials(batch_df, epoch_id) \
-            .write.mode("append").parquet(self.sink_dir)
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 4) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        return (stream.writeStream
-                .foreachBatch(self._apply_batch)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start())
-
     def read(self, spark: SparkSession) -> DataFrame:
         return merge_theta_partials(spark.read.parquet(self.sink_dir),
                                     self.key_cols)
 
-    def compact(self, spark: SparkSession) -> None:
-        """Min-merge all partials per bucket into one row (epoch -1)."""
-        state = (spark.read.parquet(self.sink_dir)
-                 .groupBy("win_start", *self.key_cols, "bucket")
-                 .agg(F.min("vmin").alias("vmin"))
-                 .withColumn("epoch", F.lit(-1)))
-        tmp = self.sink_dir.rstrip("/") + ".compact"
-        state.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite") \
-            .parquet(self.sink_dir)
+    def _compacted(self, spark: SparkSession) -> DataFrame:
+        """All partials of a (window, keys, sketch bucket) min-merged
+        into one row."""
+        return (spark.read.parquet(self.sink_dir)
+                .groupBy("win_start", *self.key_cols, "bucket")
+                .agg(F.min("vmin").alias("vmin")))

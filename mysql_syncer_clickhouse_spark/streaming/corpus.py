@@ -30,10 +30,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..functions import text as TX
+from .pipeline import write_epoch_partition
 
 
 @dataclass
@@ -98,40 +97,13 @@ class CorpusIngestPipeline:
                   .observe(obs,
                            F.count(F.lit(1)).alias("ingested"),
                            F.sum(keep.cast("long")).alias("kept")))
-        # epoch-partitioned dynamic overwrite: a replayed epoch (which
-        # keeps identical rows -- the gate is deterministic) REPLACES
-        # its own partition instead of appending duplicates, making the
-        # sink exactly-once with no dedup-on-read
-        (scored.filter(keep).withColumn("epoch", F.lit(epoch_id))
-               .write.mode("overwrite")
-               .option("partitionOverwriteMode", "dynamic")
-               .partitionBy("epoch").parquet(self.sink_dir))
+        # the gate is deterministic, so a replayed epoch keeps
+        # identical rows and may replace its own partition
+        write_epoch_partition(scored.filter(keep), epoch_id, self.sink_dir)
         got = dict(obs.get)
         self.metrics.ingested += int(got.get("ingested") or 0)
         self.metrics.kept += int(got.get("kept") or 0)
         self.metrics.epochs += 1
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 4,
-              processing_time: str | None = None) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        writer = (self.curate_stream(stream).writeStream
-                  .foreachBatch(self._apply_batch)
-                  .option("checkpointLocation", self.checkpoint_dir)
-                  .outputMode("update"))
-        if processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def run_available(self, spark: SparkSession, source_dir: str,
-                      schema: StructType, **kw) -> None:
-        q = self.start(spark, source_dir, schema, **kw)
-        q.awaitTermination()
 
     def corpus(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.sink_dir)

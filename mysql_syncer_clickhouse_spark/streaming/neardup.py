@@ -9,8 +9,8 @@ parquet next to the checkpoint -- because that is the only relation
 the screen needs: a new document is a near-dup candidate iff one of
 its band signatures already exists. Per micro-batch:
 
-    1. band signatures for the batch docs (the same shingle->minhash->
-       band pipeline as the batch operator, over a bounded batch);
+    1. band signatures for the batch docs (the batch operator's fused
+       shingle->minhash->band path, over a bounded batch);
     2. screen: drop docs sharing ANY band bucket with the state table
        or with a smaller-id doc in the same batch;
     3. append survivors to the sink and THEIR bands to the state.
@@ -45,10 +45,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 from ..operators import dedup
+from .pipeline import write_epoch_partition
 
 
 @dataclass
@@ -66,10 +65,12 @@ class NearDupMetrics:
 
 def band_signatures(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", k: int = 8) -> DataFrame:
-    """(id, band, band_sig) for each doc: the unfused building-block
-    chain (shingle-hash -> per-doc minhash mins -> packed band sigs)."""
-    hashed = dedup.hashed_shingle_set(docs, id_col, text_col, k)
-    return dedup.lsh_band_signatures(dedup.minhash_signatures(hashed))
+    """(id, band, band_sig) for each doc: the batch operator's fused
+    path (all minhash mins in one per-doc aggregation, bands packed by
+    column arithmetic on the wide row)."""
+    return dedup.fused_band_rows(dedup.fused_doc_profile(
+        docs.select(F.col(id_col).alias("id"),
+                    F.col(text_col).alias("text")), k))
 
 
 @dataclass
@@ -118,13 +119,9 @@ class NearDupIngestPipeline:
         kept = batch_df.join(
             dropped.withColumnRenamed("id", "doc_id"), "doc_id",
             "left_anti")
-        # epoch-partitioned dynamic overwrite: a replayed epoch keeps
-        # the identical docs (the probe excludes same-epoch state), so
-        # overwriting its own partition makes the sink exactly-once
-        (kept.withColumn("epoch", F.lit(epoch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("epoch").parquet(self.sink_dir))
+        # a replayed epoch keeps the identical docs (the probe ignores
+        # self-hits), so it may replace its own partition
+        write_epoch_partition(kept, epoch_id, self.sink_dir)
         (bands.join(dropped, "id", "left_anti")
               .select("band", "band_sig", F.col("id").alias("rep_id"))
               .write.mode("append").parquet(self.state_dir))
@@ -134,28 +131,6 @@ class NearDupIngestPipeline:
         self.metrics.kept += n_in - n_drop
         self.metrics.dropped_neardup += n_drop
         self.metrics.epochs += 1
-
-    def start(self, spark: SparkSession, source_dir: str,
-              schema: StructType, *,
-              max_files_per_trigger: int = 1,
-              processing_time: str | None = None) -> StreamingQuery:
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        writer = (stream.writeStream
-                  .foreachBatch(self._apply_batch)
-                  .option("checkpointLocation", self.checkpoint_dir)
-                  .outputMode("append"))
-        if processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def run_available(self, spark: SparkSession, source_dir: str,
-                      schema: StructType, **kw) -> None:
-        q = self.start(spark, source_dir, schema, **kw)
-        q.awaitTermination()
 
     def corpus(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.sink_dir)

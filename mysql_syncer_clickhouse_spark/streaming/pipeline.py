@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
@@ -42,6 +42,45 @@ from ..plans.rules import Rule
 # the sink's schema sidecar: `_`-prefixed, so Spark's file listing
 # never takes it for a data file
 SINK_SCHEMA_FILE = "_sink_schema.json"
+
+
+def start_stream(stream: DataFrame,
+                 apply_batch: Callable[[DataFrame, int], None],
+                 checkpoint_dir: str, *,
+                 processing_time: str | None = None) -> StreamingQuery:
+    """The package's one micro-batch loop: run `apply_batch(batch,
+    epoch_id)` over each micro-batch of `stream`, committing the
+    epoch's offsets to `checkpoint_dir` after it returns. Without
+    `processing_time` it drains what is available now, then stops.
+
+    `stream` is any streaming DataFrame the apply function accepts --
+    the CLI's changelog and binlog streams, sources/debezium's reader
+    or a real Kafka reader, a rollup's or ingest pipeline's input
+    files. Output mode only
+    matters to a stateful stream operator; the one here is
+    CorpusIngestPipeline.curate_stream's watermarked dropDuplicates,
+    which runs under `update`."""
+    writer = (stream.writeStream
+              .foreachBatch(apply_batch)
+              .option("checkpointLocation", checkpoint_dir)
+              .outputMode("update"))
+    if processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    else:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def write_epoch_partition(df: DataFrame, epoch_id: int,
+                          sink_dir: str) -> None:
+    """Exactly-once sink write for an apply function whose replay of
+    an epoch yields the same rows: tag them with `epoch` and overwrite
+    that one partition (dynamic partition overwrite), so a replayed
+    epoch replaces its own output instead of appending a copy."""
+    (df.withColumn("epoch", F.lit(epoch_id))
+       .write.mode("overwrite")
+       .option("partitionOverwriteMode", "dynamic")
+       .partitionBy("epoch").parquet(sink_dir))
 
 
 @dataclass
@@ -237,24 +276,6 @@ class StreamingSyncPipeline:
                                      epoch_id)
         self.metrics.record_event_ts(observed.pop("__max_ts", None))
         self.metrics.record_counts(observed)
-
-    def start_stream(self, stream: DataFrame, *,
-                     processing_time: str | None = None) -> StreamingQuery:
-        """Attach the apply loop to ANY streaming DataFrame in the
-        normalized changelog schema -- the CLI's parquet changelog
-        stream (`__main__._changelog_frame`), the binlog decode,
-        sources/debezium.read_debezium_stream, or a real Kafka reader
-        all plug in here. Without `processing_time` it drains what is
-        available now, then stops."""
-        writer = (stream.writeStream
-                  .foreachBatch(self._apply_batch)
-                  .option("checkpointLocation", self.checkpoint_dir)
-                  .outputMode("update"))
-        if processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def current_state(self, spark: SparkSession) -> DataFrame:
         """Dedup-on-read view of the sink (ReplacingMergeTree SELECT

@@ -17,6 +17,7 @@ from decimal import Decimal
 import pytest
 
 from mysql_syncer_clickhouse_spark.sinks import clickhouse_native as N
+from mysql_syncer_clickhouse_spark.streaming.pipeline import start_stream
 from tests.test_streaming import (
     ROWS_PART1, ROWS_PART2, SCHEMA_DDL, _write_part)
 
@@ -600,14 +601,15 @@ def test_stream_applies_ddl_then_epoch_ordered_inserts(
     src.mkdir()
     _write_part(spark, str(src), ROWS_PART1, "p1")
     sink = _sink(fake_native)
-    q = sink.attach(spark.readStream.schema(SCHEMA_DDL)
-                    .parquet(str(src)),
-                    str(tmp_path / "ck1"))
+    sink.ensure_table()
+    q = start_stream(spark.readStream.schema(SCHEMA_DDL)
+                     .parquet(str(src)),
+                     sink.apply_batch, str(tmp_path / "ck1"))
     q.awaitTermination()
     _write_part(spark, str(src), ROWS_PART2, "p2")
-    q = sink.attach(spark.readStream.schema(SCHEMA_DDL)
-                    .parquet(str(src)), str(tmp_path / "ck1"),
-                    ensure=False)
+    q = start_stream(spark.readStream.schema(SCHEMA_DDL)
+                     .parquet(str(src)),
+                     sink.apply_batch, str(tmp_path / "ck1"))
     q.awaitTermination()
     assert fake_native.queries[0].startswith("CREATE TABLE")
     all_rows = [r for _, rows in fake_native.inserts for r in rows]

@@ -16,6 +16,7 @@ import pytest
 
 from mysql_syncer_clickhouse_spark.sinks.clickhouse import (
     ClickHouseHTTPSink)
+from mysql_syncer_clickhouse_spark.streaming.pipeline import start_stream
 from tests.test_streaming import (
     ROWS_PART1, ROWS_PART2, SCHEMA_DDL, _write_part)
 
@@ -107,7 +108,9 @@ def test_stream_applies_ddl_then_epoch_ordered_bulk_inserts(spark, fake_ch,
     schema = spark.createDataFrame([], SCHEMA_DDL).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = _sink(fake_ch.url).attach(stream, str(tmp_path / "ckpt"))
+    sink = _sink(fake_ch.url)
+    sink.ensure_table()
+    q = start_stream(stream, sink.apply_batch, str(tmp_path / "ckpt"))
     q.awaitTermination()
 
     assert fake_ch.requests[0][0].startswith("CREATE TABLE IF NOT EXISTS")
@@ -188,7 +191,8 @@ def test_debezium_to_clickhouse_end_to_end(spark, fake_ch, tmp_path):
                  ("mydate", "bigint", True)],
         pk=("id",))
     stream = read_debezium_stream(spark, src, ROW_DDL)
-    q = sink.attach(stream, str(tmp_path / "ckpt"))
+    sink.ensure_table()
+    q = start_stream(stream, sink.apply_batch, str(tmp_path / "ckpt"))
     q.awaitTermination()
 
     queries = [r[0] for r in fake_ch.requests]

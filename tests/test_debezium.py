@@ -14,7 +14,7 @@ from mysql_syncer_clickhouse_spark.plans.rules import Rule
 from mysql_syncer_clickhouse_spark.sources.debezium import (
     parse_debezium, read_debezium_batch, read_debezium_stream)
 from mysql_syncer_clickhouse_spark.streaming.pipeline import (
-    StreamingSyncPipeline)
+    StreamingSyncPipeline, start_stream)
 
 ROW_DDL = "id long, title string, mydate long"
 
@@ -152,7 +152,8 @@ def test_pk_change_moves_row_through_debezium_feed(spark, dirs):
     rule = Rule(source_schema="app", source_table="items",
                 sink_schema="olap", sink_table="items_sink", pk=("id",))
     pipe = StreamingSyncPipeline(rule, ["id"], sink, ckpt)
-    q = pipe.start_stream(read_debezium_stream(spark, src, ROW_DDL))
+    q = start_stream(read_debezium_stream(spark, src, ROW_DDL),
+                     pipe._apply_batch, pipe.checkpoint_dir)
     q.awaitTermination()
     state = {r["id"]: r["title"]
              for r in pipe.current_state(spark).collect()}
@@ -180,7 +181,8 @@ def test_stream_e2e_through_pipeline(spark, dirs):
                 pk=("id",), field_mapping={"title": "es_title"})
     _write_lines(src, "p1.jsonl", LINES_P1)
     pipe = StreamingSyncPipeline(rule, ["id"], sink, ckpt)
-    q = pipe.start_stream(read_debezium_stream(spark, src, ROW_DDL))
+    q = start_stream(read_debezium_stream(spark, src, ROW_DDL),
+                     pipe._apply_batch, pipe.checkpoint_dir)
     q.awaitTermination()
     state = {r["id"]: r["es_title"]
              for r in pipe.current_state(spark).collect()}
@@ -188,7 +190,8 @@ def test_stream_e2e_through_pipeline(spark, dirs):
 
     _write_lines(src, "p2.jsonl", LINES_P2)   # resume on same checkpoint
     pipe2 = StreamingSyncPipeline(rule, ["id"], sink, ckpt)
-    q2 = pipe2.start_stream(read_debezium_stream(spark, src, ROW_DDL))
+    q2 = start_stream(read_debezium_stream(spark, src, ROW_DDL),
+                      pipe2._apply_batch, pipe2.checkpoint_dir)
     q2.awaitTermination()
     state = {r["id"]: r["es_title"]
              for r in pipe2.current_state(spark).collect()}

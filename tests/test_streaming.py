@@ -15,7 +15,7 @@ from pyspark.sql.types import StructType
 from mysql_syncer_clickhouse_spark.operators.upsert import latest_state
 from mysql_syncer_clickhouse_spark.plans.rules import Rule
 from mysql_syncer_clickhouse_spark.streaming.pipeline import (
-    SINK_SCHEMA_FILE, StreamingSyncPipeline)
+    SINK_SCHEMA_FILE, StreamingSyncPipeline, start_stream)
 
 SCHEMA_DDL = "seq long, op string, id long, title string, mydate long"
 
@@ -68,7 +68,8 @@ def _drain(pipe, spark, src, schema):
     catch-up."""
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 4).parquet(src))
-    pipe.start_stream(stream).awaitTermination()
+    start_stream(stream, pipe._apply_batch,
+                 pipe.checkpoint_dir).awaitTermination()
 
 
 def _sidecar(sink):
@@ -488,11 +489,11 @@ def test_continuous_aggregate_incremental_and_replay_safe(spark, dirs):
     d1 = to_parts(rows1)
     _write_part(spark, src, [tuple(r) for r in d1.collect()], "p1",
                 schema=d1.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()
+    _drain(agg, spark, src, d1.schema)
     d2 = to_parts(rows2)
     _write_part(spark, src, [tuple(r) for r in d2.collect()], "p2",
                 schema=d2.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()   # resume
+    _drain(agg, spark, src, d1.schema)   # resume
 
     def snap():
         return {(str(r["win_start"]), r["event_type"], r["n"], r["total"])
@@ -735,11 +736,11 @@ def test_distinct_continuous_aggregate_exact_and_replay_safe(spark, dirs):
     d1 = to_df(rows1)
     _write_part(spark, src, [tuple(r) for r in d1.collect()], "p1",
                 schema=d1.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()
+    _drain(agg, spark, src, d1.schema)
     d2 = to_df(rows2)
     _write_part(spark, src, [tuple(r) for r in d2.collect()], "p2",
                 schema=d2.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()
+    _drain(agg, spark, src, d1.schema)
 
     def snap():
         return {(str(r["win_start"]), r["event_type"], r["n_distinct"])
@@ -784,11 +785,11 @@ def test_hll_continuous_aggregate_banded_and_replay_safe(spark, dirs):
     d1 = to_df(rows1)
     _write_part(spark, src, [tuple(r) for r in d1.collect()], "p1",
                 schema=d1.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()
+    _drain(agg, spark, src, d1.schema)
     d2 = to_df(rows2)
     _write_part(spark, src, [tuple(r) for r in d2.collect()], "p2",
                 schema=d2.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()
+    _drain(agg, spark, src, d1.schema)
 
     def est():
         [r] = agg.read(spark).collect()
@@ -877,11 +878,11 @@ def test_theta_continuous_aggregate_banded_portable_and_replay_safe(
     d1 = to_df(rows1)
     _write_part(spark, src, [tuple(r) for r in d1.collect()], "p1",
                 schema=d1.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()
+    _drain(agg, spark, src, d1.schema)
     d2 = to_df(rows2)
     _write_part(spark, src, [tuple(r) for r in d2.collect()], "p2",
                 schema=d2.schema)
-    agg.start(spark, src, d1.schema).awaitTermination()
+    _drain(agg, spark, src, d1.schema)
 
     def est():
         [r] = agg.read(spark).collect()
@@ -906,3 +907,40 @@ def test_theta_continuous_aggregate_banded_portable_and_replay_safe(
         (r["bucket"], r["vmin"])
         for r in spark.read.parquet(sink).collect())
     assert batch == state
+
+
+def test_streams_start_in_one_place():
+    """Every stream in the package runs through streaming/pipeline.
+    start_stream: `.writeStream` appears once in the package source,
+    there, and no class keeps a stream-starting method of its own."""
+    import pathlib
+
+    import mysql_syncer_clickhouse_spark as pkg
+    from mysql_syncer_clickhouse_spark.sinks.clickhouse import (
+        ClickHouseHTTPSink)
+    from mysql_syncer_clickhouse_spark.sinks.clickhouse_native import (
+        ClickHouseNativeSink)
+    from mysql_syncer_clickhouse_spark.streaming import continuous_agg
+    from mysql_syncer_clickhouse_spark.streaming.bloom_screen import (
+        BloomIngestPipeline)
+    from mysql_syncer_clickhouse_spark.streaming.corpus import (
+        CorpusIngestPipeline)
+    from mysql_syncer_clickhouse_spark.streaming.neardup import (
+        NearDupIngestPipeline)
+
+    root = pathlib.Path(pkg.__file__).parent
+    hits = [(str(p.relative_to(root)), n)
+            for p in sorted(root.rglob("*.py"))
+            for n in [p.read_text().count(".writeStream")] if n]
+    assert hits == [(os.path.join("streaming", "pipeline.py"), 1)]
+    for cls in (StreamingSyncPipeline, CorpusIngestPipeline,
+                BloomIngestPipeline, NearDupIngestPipeline,
+                continuous_agg.ContinuousAggregate,
+                continuous_agg.DistinctContinuousAggregate,
+                continuous_agg.HllContinuousAggregate,
+                continuous_agg.ThetaContinuousAggregate):
+        assert not hasattr(cls, "start"), cls
+        assert not hasattr(cls, "run_available"), cls
+        assert not hasattr(cls, "start_stream"), cls
+    for cls in (ClickHouseHTTPSink, ClickHouseNativeSink):
+        assert not hasattr(cls, "attach"), cls

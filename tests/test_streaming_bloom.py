@@ -13,12 +13,22 @@ from pyspark.sql import functions as F
 
 from mysql_syncer_clickhouse_spark.streaming.bloom_screen import (
     BloomIngestPipeline)
+from mysql_syncer_clickhouse_spark.streaming.pipeline import start_stream
 
 SCHEMA_DDL = "doc_id long, source string, text string, ts timestamp"
 
 
 def _schema(spark):
     return spark.createDataFrame([], SCHEMA_DDL).schema
+
+
+def _drain(pipe, spark, src):
+    """Drain every doc file now in `src` through `pipe`, one file per
+    epoch, then stop."""
+    stream = (spark.readStream.schema(_schema(spark))
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    start_stream(stream, pipe._apply_batch,
+                 pipe.checkpoint_dir).awaitTermination()
 
 
 def _write_part(spark, src, rows, name):
@@ -59,8 +69,7 @@ def test_bloom_screen_within_and_across_batches(spark, dirs):
         (4, "web", "alpha text", t0),    # cross-batch dup -> dropped
         (5, "web", "gamma text", t0),
     ], "p2")
-    pipe.run_available(spark, dirs["src"], _schema(spark),
-                       max_files_per_trigger=1)
+    _drain(pipe, spark, dirs["src"])
 
     ids = {r["doc_id"] for r in pipe.corpus(spark).collect()}
     assert ids == {1, 3, 5}
@@ -79,14 +88,14 @@ def test_bloom_screen_survives_restart_horizon_free(spark, dirs):
     pipe = _pipe(dirs)
     _write_part(spark, dirs["src"],
                 [(1, "web", "original doc", t0)], "p1")
-    pipe.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe, spark, dirs["src"])
 
     pipe2 = _pipe(dirs)
     _write_part(spark, dirs["src"], [
         (6, "web", "original doc", t0),   # long-horizon duplicate
         (7, "web", "fresh doc", t0),
     ], "p2")
-    pipe2.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe2, spark, dirs["src"])
     ids = {r["doc_id"] for r in pipe2.corpus(spark).collect()}
     assert ids == {1, 7}
 

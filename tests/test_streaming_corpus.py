@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from mysql_syncer_clickhouse_spark.streaming.corpus import CorpusIngestPipeline
+from mysql_syncer_clickhouse_spark.streaming.pipeline import start_stream
 
 SCHEMA_DDL = ("doc_id long, source string, text string, ts timestamp")
 
@@ -24,6 +25,15 @@ LOW = "a a a a"
 
 def _schema(spark) -> StructType:
     return spark.createDataFrame([], SCHEMA_DDL).schema
+
+
+def _drain(pipe, spark, src):
+    """Drain every doc file now in `src` through `pipe`, four files per
+    epoch, then stop."""
+    stream = (spark.readStream.schema(_schema(spark))
+              .option("maxFilesPerTrigger", 4).parquet(src))
+    start_stream(pipe.curate_stream(stream), pipe._apply_batch,
+                 pipe.checkpoint_dir).awaitTermination()
 
 
 def _write_part(spark, src, rows, name):
@@ -56,7 +66,7 @@ def test_corpus_ingest_dedup_quality_and_resume(spark, dirs):
         (4, "web", LOW, t0),           # fails the quality gate
         (5, "web", "mail me at a@b.com " + GOOD, t0),  # PII redacted
     ], "p1")
-    pipe.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe, spark, dirs["src"])
 
     out = {r["doc_id"]: r for r in pipe.corpus(spark).collect()}
     assert set(out) == {1, 2, 5} or set(out) == {3, 2, 5}  # one of the dup pair
@@ -76,7 +86,7 @@ def test_corpus_ingest_dedup_quality_and_resume(spark, dirs):
         (6, "web", GOOD, t1),                   # dup of doc 1 across runs
         (7, "web", DUPE + " fresh continuation", t1),
     ], "p2")
-    pipe2.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe2, spark, dirs["src"])
 
     ids = {r["doc_id"] for r in pipe2.corpus(spark).collect()}
     assert 7 in ids
@@ -93,7 +103,7 @@ def test_corpus_ingest_no_redact_keeps_text(spark, dirs):
     _write_part(spark, dirs["src"], [
         (1, "web", "reach me at x@y.org " + GOOD, t0),
     ], "p1")
-    pipe.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe, spark, dirs["src"])
     [r] = pipe.corpus(spark).collect()
     assert "x@y.org" in r["text"]
 
@@ -109,7 +119,7 @@ def test_corpus_metrics_served_over_stat(spark, dirs):
                                 checkpoint_dir=dirs["ckpt"])
     _write_part(spark, dirs["src"], [
         (1, "web", GOOD, t0), (2, "web", LOW, t0)], "p1")
-    pipe.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe, spark, dirs["src"])
     srv = StatusServer(pipe.metrics, port=0,
                        extra={"pipeline": "corpus-ingest"}).start()
     try:
@@ -150,7 +160,7 @@ def test_corpus_ingest_with_classifier_gate(spark, dirs):
         (1, "web", GOOD + " fresh tail one", t0),
         (2, "web", spam + " fresh tail two", t0),
     ], "p1")
-    pipe.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe, spark, dirs["src"])
 
     kept = {r["doc_id"] for r in pipe.corpus(spark).collect()}
     assert kept == {1}

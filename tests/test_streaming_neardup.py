@@ -12,6 +12,7 @@ import pytest
 
 from mysql_syncer_clickhouse_spark.streaming.neardup import (
     NearDupIngestPipeline, band_signatures)
+from mysql_syncer_clickhouse_spark.streaming.pipeline import start_stream
 
 SCHEMA_DDL = "doc_id long, source string, text string, ts timestamp"
 
@@ -24,6 +25,15 @@ OTHER = ("completely different subject matter entirely about quantum "
 
 def _schema(spark):
     return spark.createDataFrame([], SCHEMA_DDL).schema
+
+
+def _drain(pipe, spark, src):
+    """Drain every doc file now in `src` through `pipe`, one file per
+    epoch, then stop."""
+    stream = (spark.readStream.schema(_schema(spark))
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    start_stream(stream, pipe._apply_batch,
+                 pipe.checkpoint_dir).awaitTermination()
 
 
 def _write_part(spark, src, rows, name):
@@ -72,8 +82,7 @@ def test_neardup_screen_within_and_across_batches(spark, dirs):
         (4, "web", BASE + " later echo", t0),  # cross-batch near-dup
         (5, "web", OTHER, t0),                 # exact dup of 3
     ], "p2")
-    pipe.run_available(spark, dirs["src"], _schema(spark),
-                       max_files_per_trigger=1)
+    _drain(pipe, spark, dirs["src"])
 
     ids = {r["doc_id"] for r in pipe.corpus(spark).collect()}
     assert ids == {1, 3}
@@ -93,7 +102,7 @@ def test_neardup_screen_survives_restart(spark, dirs):
     t0 = _ts(spark, "2026-01-01 10:00:00")
     pipe = _pipe(dirs)
     _write_part(spark, dirs["src"], [(1, "web", BASE, t0)], "p1")
-    pipe.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe, spark, dirs["src"])
 
     # a NEW pipeline object: memory lives in state_dir + checkpoint
     pipe2 = _pipe(dirs)
@@ -101,7 +110,7 @@ def test_neardup_screen_survives_restart(spark, dirs):
         (6, "web", BASE + " resurfaced", t0),
         (7, "web", OTHER, t0),
     ], "p2")
-    pipe2.run_available(spark, dirs["src"], _schema(spark))
+    _drain(pipe2, spark, dirs["src"])
     ids = {r["doc_id"] for r in pipe2.corpus(spark).collect()}
     assert ids == {1, 7}
 
@@ -125,3 +134,20 @@ def test_neardup_replay_does_not_self_collide(spark, dirs):
     assert out.select("doc_id").distinct().count() == 2
     assert out.count() == 2
     assert pipe.metrics.dropped_neardup == 0
+
+
+def test_band_signatures_match_the_unfused_chain(spark):
+    """The screen bands through the batch operator's fused path; its
+    (id, band, band_sig) rows equal the unfused shingle-hash ->
+    minhash -> band chain's, short, empty and NULL texts included (a
+    NULL text bands to NULL signatures on both paths)."""
+    from mysql_syncer_clickhouse_spark.operators import dedup
+    t0 = _ts(spark, "2026-01-01 10:00:00")
+    texts = [BASE, NEAR, OTHER, "short", "", "exactly8", None]
+    docs = spark.createDataFrame(
+        [(i, "web", t, t0) for i, t in enumerate(texts)], SCHEMA_DDL)
+    unfused = dedup.lsh_band_signatures(dedup.minhash_signatures(
+        dedup.hashed_shingle_set(docs, "doc_id", "text", 8)))
+    got = sorted(map(tuple, band_signatures(docs).collect()))
+    assert got == sorted(map(tuple, unfused.collect()))
+    assert len(got) == 4 * len(texts)     # one row per doc and band
