@@ -51,20 +51,10 @@ def bit_decode(col: Column | str) -> Column:
     )
 
 
-def bytes_to_string(col: Column | str) -> Column:
-    """[]byte -> UTF-8 string (river/sync.go:281-285)."""
-    return _c(col).cast("string")
-
-
 def json_get(col: Column | str, path: str) -> Column:
     """JSON text -> extracted value at `path` (river/sync.go:286-297
     parses the whole document; point lookups are the query-layer use)."""
     return F.get_json_object(_c(col), path)
-
-
-def json_parse(col: Column | str, schema) -> Column:
-    """JSON text -> typed struct when the shape is known."""
-    return F.from_json(_c(col), schema)
 
 
 def date_parse(col: Column | str) -> Column:

@@ -173,11 +173,6 @@ def mysql_to_spark_type(mysql_type: str, *,
     return T.StringType()
 
 
-def mysql_column_to_field(name: str, mysql_type: str, nullable: bool = True,
-                          **kw) -> T.StructField:
-    return T.StructField(name, mysql_to_spark_type(mysql_type, **kw), nullable)
-
-
 # ---------------------------------------------------------------------------
 # ClickHouse-side DDL emission (the reference's auto-CREATE,
 # README.md:141-161 + TransferToCkTypeByColumnType README.md:165-266).

@@ -5,9 +5,8 @@ AND real codecs: header parsing for every supported container plus
 from-scratch pixel decoders in this module (NetPBM, BMP, GIF-LZW at
 `_gif_pixels`, PNG-deflate at `_png_pixels`) and the sibling modules
 for JPEG (`jpegcodec.py`), FLAC (`flaccodec.py`) and PCM/G.711/ADPCM
-(`audiocodec.py`). No image/audio libraries exist in this container;
-PIL is an explicit opt-in cross-check when present, never the default
-path.
+(`audiocodec.py`). No image/audio library is used: every path is
+pure Python and deterministic.
 
 At scale the pattern is: keep blobs in their own column, partition by a
 content key, and run decode/feature-extraction as mapInPandas so each
@@ -16,7 +15,6 @@ task streams Arrow batches instead of per-row Python calls.
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
 from collections.abc import Iterator
@@ -35,16 +33,6 @@ def with_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id",
                        F.encode(F.col(text_col), "UTF-8").alias("payload"))
 
-
-try:                                    # optional full codec (see _decode)
-    from PIL import Image as _PIL_Image  # pragma: no cover
-except ImportError:                     # this container: no PIL/ffmpeg
-    _PIL_Image = None
-
-# PIL decoding is an explicit opt-in, NOT on by mere importability:
-# the registered oracle mirrors the header-parse/fake arithmetic, so an
-# environment that happens to have PIL must not silently change results.
-_REAL_CODEC = os.environ.get("SPARK_GRAFT_REAL_CODEC", "") == "1"
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -137,24 +125,13 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, str]:
 
 
 def _decode(payload: bytes) -> tuple[int, int, int, str]:
-    """Decode image metadata, in order: (1) the pure-Python PNG/BMP
-    header parse (real decoding, always on, deterministic); (2) PIL
-    for other formats IF opted in via SPARK_GRAFT_REAL_CODEC=1; (3)
-    the deterministic fake for non-image payloads. The Spark-side
-    plumbing (Arrow batching, schema, partition parallelism) is
-    identical on every path."""
+    """Decode image metadata: the pure-Python image header parse
+    (real decoding, deterministic) when the payload carries one,
+    otherwise the deterministic fake for non-image payloads."""
     payload = bytes(payload)
     hdr = parse_image_header(payload)
     if hdr is not None:
         return (len(payload), *hdr)
-    if _REAL_CODEC and _PIL_Image is not None:  # pragma: no cover
-        import io
-        try:
-            with _PIL_Image.open(io.BytesIO(payload)) as im:
-                return (len(payload), im.width, im.height,
-                        (im.format or "unknown").lower())
-        except Exception:
-            pass
     return _fake_decode(payload)
 
 
@@ -298,8 +275,8 @@ def with_pixel_payload(docs: DataFrame) -> DataFrame:
 
 def decode_image_meta(df: DataFrame) -> DataFrame:
     """mapInPandas decode: per Arrow batch, extract (n_bytes, width,
-    height, format) from the binary payload via `_decode` (PIL when
-    available, deterministic fake otherwise) -- the Spark-side plumbing
+    height, format) from the binary payload via `_decode` (header parse
+    for images, deterministic fake otherwise) -- the Spark-side plumbing
     (schema, batch iteration, partition parallelism) is the part under
     test."""
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -379,38 +356,6 @@ def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
             })
 
     return df.mapInPandas(extract, FEATURES_SCHEMA)
-
-
-META_FEATURES_SCHEMA = ("doc_id long, n_bytes long, width int, "
-                        "height int, format string, "
-                        "features array<double>")
-
-
-def decode_meta_and_features(df: DataFrame, dim: int = 8) -> DataFrame:
-    """Fused decode_image_meta + extract_features: one payload pass
-    emitting both the header metadata and the feature vector (round
-    15, guide §4 -- the registry's multimodal entry consumed the same
-    payload relation through TWO mapInPandas branches, so the payload
-    synthesis and the Arrow crossing ran twice and the results met in
-    a join; column-for-column identical values to
-    decode_image_meta(df).join(extract_features(df, dim), "doc_id"),
-    both derived from `_decode` / the byte length exactly as the
-    standalone operators derive them)."""
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = pdf["payload"].map(_decode)
-            n = meta.map(lambda t: t[0])
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": n,
-                "width": meta.map(lambda t: t[1]),
-                "height": meta.map(lambda t: t[2]),
-                "format": meta.map(lambda t: t[3]),
-                "features": n.map(lambda ln: [
-                    (ln * (j + 1)) % 997 / 997.0 for j in range(dim)]),
-            })
-
-    return df.mapInPandas(decode, META_FEATURES_SCHEMA)
 
 
 # --- NetPBM (PPM/PGM): the format whose PIXELS decode codec-free ---------

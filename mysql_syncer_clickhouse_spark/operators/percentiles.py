@@ -34,8 +34,7 @@ result = lo + (hi-lo)*frac on doubles.
 ``mode="auto"`` picks by a row-count threshold. Pass ``rows_hint``
 (approximate input rows) and auto costs ZERO extra jobs; without a
 hint it runs one two-column count() job, which makes hint-less auto
-interactive-only -- pipelines pass the mode or the hint. The env
-override SPARK_GRAFT_PCTL_RANGE=1 forces range for probes.
+interactive-only -- pipelines pass the mode or the hint.
 """
 
 from __future__ import annotations
@@ -145,13 +144,11 @@ def exact_group_percentiles(df: DataFrame, group_col: str,
     """One row per group: p<pct> double columns, exact percentiles of
     `value_col` with Spark `percentile` interpolation semantics.
     `mode`: 'window' (per-group sort), 'range' (bucketed -- the 100x
-    shape), or 'auto' (row-count threshold; env
-    SPARK_GRAFT_PCTL_RANGE=1 forces range). With mode='auto' pass
+    shape), or 'auto' (row-count threshold). With mode='auto' pass
     `rows_hint` (an approximate input row count) to pick the shape with
     ZERO extra jobs; without a hint auto runs one count() job and is
     therefore interactive-only -- pipelines should pass the mode or the
     hint explicitly."""
-    import os
     tags = [str(int(round(p * 100))) for p in ps]
     if len(set(tags)) != len(tags):
         # 0.5 and 0.504 both tag "50" -> silent duplicate p-column
@@ -159,9 +156,7 @@ def exact_group_percentiles(df: DataFrame, group_col: str,
         raise ValueError(
             f"percentile list {ps} produces colliding column tags "
             f"{tags}; percentiles must differ in int(round(p*100))")
-    if os.environ.get("SPARK_GRAFT_PCTL_RANGE") == "1":
-        mode = "range"
-    elif mode == "auto":
+    if mode == "auto":
         n = (rows_hint if rows_hint is not None
              else df.select(group_col, value_col).count())
         mode = "range" if n >= AUTO_RANGE_THRESHOLD else "window"

@@ -196,9 +196,6 @@ def compare_digests(src_rows, dst_rows) -> DigestCompare:
 
 # --------------------------------------------------------- drill down
 
-_DIFF_SCHEMA_DOC = ("pk columns..., status, differing_columns, "
-                    "src_row, dst_row")
-
 # diff-row JSON payloads feed repair re-INSERTs: nulls stay explicit
 # (an omitted key takes the column DEFAULT in JSONEachRow) and
 # timestamps render at FULL microsecond precision -- Spark's default

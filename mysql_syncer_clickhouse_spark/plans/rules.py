@@ -15,7 +15,6 @@ synced column set to the sink schema (river/river.go:293-312).
 
 from __future__ import annotations
 
-import fnmatch
 import re
 import tomllib
 from dataclasses import dataclass, field
@@ -127,10 +126,6 @@ def load_rules_toml(path: str) -> RuleSet:
     with open(path, "rb") as f:
         cfg = tomllib.load(f)
     return rules_from_config(cfg)
-
-
-def wildcard_to_regex(pattern: str) -> str:
-    return fnmatch.translate(pattern)
 
 
 _REGEX_META = set("\\.+*?()|[]{}^$")

@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from ..functions.vectors import cosine
 from ..operators import ann, bloom, curation, dedup, multimodal, sketch
 from ..sources.tables import load_table
 
@@ -384,16 +383,6 @@ SELECT query_id, rk, neighbor_id, score FROM (
 """
 
 
-def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with a LEARNED coarse quantizer (operators/ann.py k-means,
-    deterministic init + 3 Lloyd iterations, nprobe=2). The raw top-k
-    has no portable SQL twin (float-iterative centroid arithmetic);
-    the registered query is ann_kmeans_ivf_recall below."""
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ann.topk_kmeans_ivf(emb, queries, k=5, n_centroids=8, nprobe=2)
-
-
 def ann_kmeans_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable wrapper for the k-means IVF index: macro recall
     of the IVF top-5 against the exact brute-force top-5, asserted
@@ -529,15 +518,6 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.token_count_bpe("text").alias("n_bpe_tokens"))
 
 
-_TOKENS_SQL = f"""
-SELECT doc_id,
-       len(string_split(trim(text), ' ')) AS n_ws_tokens,
-       len(regexp_extract_all(text, '{TX.BPE_REGEX}')) AS n_bpe_tokens
-FROM documents
-"""
-
-
-
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     return docs.select("doc_id",
@@ -546,26 +526,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.round(TX.avg_word_len("text"), 6)
                         .alias("avg_word_len"),
                        TX.quality_score("text").alias("quality"))
-
-
-_QUALITY_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents
-), m AS (
-  SELECT doc_id,
-         CAST(len(list_filter(w, x -> x IN ({_STOP_IN}))) AS DOUBLE)
-           / len(w) AS stop,
-         CAST(list_sum(list_transform(w, x -> len(x))) AS DOUBLE)
-           / len(w) AS awl,
-         len(w) AS n
-  FROM t
-)
-SELECT doc_id, ROUND(stop, 6) AS stop_ratio, ROUND(awl, 6) AS avg_word_len,
-       ROUND(0.4 * least(CAST(n AS DOUBLE) / 100.0, 1.0)
-             + 0.3 * (1.0 - stop)
-             + 0.3 * least(awl / 10.0, 1.0), 6) AS quality
-FROM m
-"""
 
 
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -583,23 +543,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", F.col("lang").alias("lang_label"),
                        F.round(ratio, 6).alias("en_signal"),
                        pred.alias("lang_pred"))
-
-
-_LANG_SQL = """
-WITH t AS (
-  SELECT doc_id, lang, string_split(trim(text), ' ') AS w FROM documents
-), m AS (
-  SELECT doc_id, lang,
-         CAST(len(list_filter(w, x -> x IN ('the','a','of','and')))
-              AS DOUBLE) / len(w) AS ratio
-  FROM t
-)
-SELECT doc_id, lang AS lang_label, ROUND(ratio, 6) AS en_signal,
-       CASE WHEN ratio >= 0.05 THEN 'en'
-            WHEN ratio > 0.0 THEN 'en-ish'
-            ELSE 'unk' END AS lang_pred
-FROM m
-"""
 
 
 def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -661,32 +604,9 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                        TX.portable_hash32(F.col("text")).alias("fp32"))
 
 
-_FP_SQL = f"""
-SELECT doc_id,
-       md5(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS fp,
-       {_H32.format(x='text')} AS fp32
-FROM documents
-"""
-
-
 # ---------------------------------------------------------------------------
 # multimodal plumbing
 # ---------------------------------------------------------------------------
-
-def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    return multimodal.decode_image_meta(
-        multimodal.with_binary_payload(docs))
-
-
-_MM_SQL = """
-SELECT doc_id, strlen(text) AS n_bytes,
-       CAST(strlen(text) % 640 AS INT) AS width,
-       CAST((strlen(text) * 7) % 480 AS INT) AS height,
-       'fake' AS format
-FROM documents
-"""
-
 
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plumbing; the oracle checks the fan-out
@@ -706,21 +626,6 @@ SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx,
        END AS frame_n_bytes
 FROM documents
 CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS frame_idx)
-"""
-
-
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    return multimodal.extract_features(
-        multimodal.with_binary_payload(docs), dim=4)
-
-
-_MM_FEATURES_SQL = """
-SELECT doc_id,
-       list_transform(generate_series(1, 4),
-                      j -> CAST((strlen(text) * j) % 997 AS DOUBLE) / 997.0)
-         AS features
-FROM documents
 """
 
 

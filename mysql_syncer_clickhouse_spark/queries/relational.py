@@ -47,26 +47,6 @@ def _t(spark, sf_dir, name, spread=False):
     return load_table(spark, sf_dir, name, spread=spread)
 
 
-def _pin_if_split_rich(df: DataFrame, source: DataFrame) -> DataFrame:
-    """Materialize a bounded fan-out relation once (localCheckpoint,
-    eager) IF the source scan is split-rich -- i.e. on a real
-    cluster-sized table, where each consumer branch re-executing the
-    scan+aggregate subtree would re-read the whole table. On the
-    split-STARVED local fixtures (single-row-group parquet: every
-    scan stage is ~one task) the pin is skipped: logical re-scans of
-    a page-cached file are nearly free and the idle cores make
-    branch-level parallelism the faster plan, while each eager pin
-    pays a whole extra job's scheduling floor (measured: pinning all
-    three shared relations costs ~4.8s of build jobs at sf0.1 to
-    save ~1s of branch recompute). Materialization only -- the
-    VALUES are identical either way, so one oracle covers both.
-    A 100 TB run would parquet-checkpoint at exactly these points."""
-    sc = df.sparkSession.sparkContext
-    if source.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df.localCheckpoint(eager=True)
-    return df
-
-
 # --- TPC-H Q1 style: pricing summary (flagship; SURVEY §7 M0) -----------
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,35 +160,6 @@ GROUP BY n_name
 """
 
 
-def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-variant window surface: ntile buckets, first/nth value,
-    and a RANGE frame (value-based, vs the ROWS frames elsewhere).
-    All over unique order keys so results are deterministic."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_orderkey"))
-    wr = (Window.partitionBy("o_custkey")
-          .orderBy(F.col("o_totalprice"))
-          .rangeBetween(-10000, 0))
-    return o.select(
-        "o_orderkey",
-        F.ntile(4).over(w).alias("quartile"),
-        F.first_value("o_orderkey").over(w).alias("first_ok"),
-        F.nth_value("o_orderkey", 2).over(w).alias("second_ok"),
-        F.round(F.sum("o_totalprice").over(wr), 2).alias("near_sum"))
-
-
-_FRAMES_SQL = """
-SELECT o_orderkey,
-       NTILE(4) OVER w AS quartile,
-       FIRST_VALUE(o_orderkey) OVER w AS first_ok,
-       NTH_VALUE(o_orderkey, 2) OVER w AS second_ok,
-       ROUND(SUM(o_totalprice) OVER (PARTITION BY o_custkey
-             ORDER BY o_totalprice
-             RANGE BETWEEN 10000 PRECEDING AND CURRENT ROW), 2) AS near_sum
-FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
-"""
-
-
 # --- TPC-H Q14 style: promo revenue (conditional aggregate over join) ----
 
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,17 +181,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   / F.col("total_revenue"), 4)))
 
 
-_Q14_SQL = f"""
-SELECT CAST(DATE_TRUNC('month', l_shipdate) AS TIMESTAMP) AS mon,
-       {sql_dsum("CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END", 'promo_revenue')},
-       {sql_dsum('l_extendedprice * (1 - l_discount)', 'total_revenue')},
-       ROUND(100.0 * CAST(ROUND(SUM(CAST((CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) AS DECIMAL(38,6))), 2) AS DOUBLE)
-             / CAST(ROUND(SUM(CAST((l_extendedprice * (1 - l_discount)) AS DECIMAL(38,6))), 2) AS DOUBLE), 4) AS promo_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY 1
-"""
-
-
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top customers by revenue from returned items (join + agg +
     deterministic top-k across four tables)."""
@@ -257,20 +197,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(dsum(rev, "revenue"))
               .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
               .limit(20))
-
-
-_Q10_SQL = f"""
-SELECT c_custkey, c_name, n_name,
-       {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')}
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
-"""
 
 
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -360,26 +286,12 @@ WHERE NOT EXISTS (SELECT 1 FROM orders
 
 # --- rollup / cube --------------------------------------------------------
 
-def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.rollup("l_returnflag", "l_linestatus")
-              .agg(F.count(F.lit(1)).alias("n"),
-                   dsum("l_quantity", "sum_qty")))
-
-
 _ROLLUP_SQL = f"""
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
        {sql_dsum('l_quantity', 'sum_qty')}
 FROM lineitem
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
-
-
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    return (orders.cube("o_orderstatus", "o_orderpriority")
-                  .agg(F.count(F.lit(1)).alias("n"),
-                       dsum("o_totalprice", "sum_price")))
 
 
 _CUBE_SQL = f"""
@@ -424,17 +336,6 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CROSS_SQL = """
 SELECT r_regionkey, r_name, n_nationkey, n_name FROM region CROSS JOIN nation
 """
-
-
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (the general form rollup/cube sugar):
-    totals by (status, priority) and by (priority) alone, one pass."""
-    orders = _t(spark, sf_dir, "orders")
-    return (orders.groupingSets(
-                [["o_orderstatus", "o_orderpriority"], ["o_orderpriority"]],
-                "o_orderstatus", "o_orderpriority")
-                  .agg(F.count(F.lit(1)).alias("n"),
-                       dsum("o_totalprice", "sum_price")))
 
 
 _GROUPING_SETS_SQL = f"""
@@ -558,36 +459,6 @@ GROUP BY c.event_id
 """
 
 
-
-def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentiles + correlation per group -- the statistical
-    aggregate surface. Exact percentile (not approx) so the oracle
-    hash-matches; approx_percentile is the scale path when a full sort
-    per group is too expensive, mirrored by approx_distinct."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.groupBy("l_returnflag")
-              .agg(F.round(F.expr("percentile(l_extendedprice, 0.5)"), 6)
-                    .alias("p50_price"),
-                   F.round(F.expr("percentile(l_extendedprice, 0.95)"), 6)
-                    .alias("p95_price"),
-                   F.round(F.corr("l_quantity", "l_extendedprice"), 6)
-                    .alias("qty_price_corr"),
-                   F.round(F.stddev_samp("l_discount"), 6)
-                    .alias("disc_stddev")))
-
-
-_PERCENTILES_SQL = """
-SELECT l_returnflag,
-       ROUND(percentile_cont(0.5) WITHIN GROUP (ORDER BY l_extendedprice), 6)
-         AS p50_price,
-       ROUND(percentile_cont(0.95) WITHIN GROUP (ORDER BY l_extendedprice), 6)
-         AS p95_price,
-       ROUND(corr(l_quantity, l_extendedprice), 6) AS qty_price_corr,
-       ROUND(stddev_samp(l_discount), 6) AS disc_stddev
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
 def categorical_association(df: DataFrame, x_col: str,
                             y_col: str) -> DataFrame:
     """ClickHouse's categorical-association aggregates -- cramersV,
@@ -652,14 +523,6 @@ def categorical_association_from_ct(ct: DataFrame) -> DataFrame:
         F.round(F.sqrt(F.col("chi2") / (F.col("chi2") + F.col("n"))), 6)
          .alias("contingency_coef"),
         F.round(F.col("h_x"), 6).alias("entropy_x"))
-
-
-def agg_association(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """cramersV / theilsU / contingency over the (l_returnflag,
-    l_linestatus) pair -- the sink DB's categorical-dependence
-    surface."""
-    li = _t(spark, sf_dir, "lineitem")
-    return categorical_association(li, "l_returnflag", "l_linestatus")
 
 
 _ASSOCIATION_SQL = """
@@ -740,40 +603,6 @@ def _t_test_closing(stats: DataFrame) -> DataFrame:
          .alias("student_df"))
 
 
-def agg_t_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """welchTTest/studentTTest surface: does extended price differ
-    between the 'O' and 'F' line statuses."""
-    li = _t(spark, sf_dir, "lineitem")
-    return two_sample_t_tests(li, "l_extendedprice",
-                              "l_linestatus", "O", "F")
-
-
-_T_TESTS_SQL = """
-WITH s AS (
-  SELECT AVG(CASE WHEN l_linestatus = 'O'
-             THEN CAST(l_extendedprice AS DOUBLE) END) AS m1,
-         VAR_SAMP(CASE WHEN l_linestatus = 'O'
-                  THEN CAST(l_extendedprice AS DOUBLE) END) AS v1,
-         COUNT(CASE WHEN l_linestatus = 'O' THEN 1 END) AS n1,
-         AVG(CASE WHEN l_linestatus = 'F'
-             THEN CAST(l_extendedprice AS DOUBLE) END) AS m2,
-         VAR_SAMP(CASE WHEN l_linestatus = 'F'
-                  THEN CAST(l_extendedprice AS DOUBLE) END) AS v2,
-         COUNT(CASE WHEN l_linestatus = 'F' THEN 1 END) AS n2
-  FROM lineitem WHERE l_linestatus IN ('O', 'F')
-)
-SELECT ROUND((m1 - m2) / SQRT(v1 / n1 + v2 / n2), 6) AS welch_t,
-       ROUND((v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2)
-             / ((v1 / n1) * (v1 / n1) / (n1 - 1)
-                + (v2 / n2) * (v2 / n2) / (n2 - 1)), 6) AS welch_df,
-       ROUND((m1 - m2) / SQRT(((n1 - 1) * v1 + (n2 - 1) * v2)
-                              / (n1 + n2 - 2)
-                              * (1.0 / n1 + 1.0 / n2)), 6) AS student_t,
-       CAST(n1 + n2 - 2 AS DOUBLE) AS student_df
-FROM s
-"""
-
-
 def mann_whitney_u(df: DataFrame, value_col: str,
                    group_col: str, group_a, group_b) -> DataFrame:
     """ClickHouse's mannWhitneyUTest statistics: (u1, u2, z) for two
@@ -816,14 +645,6 @@ def mann_whitney_u(df: DataFrame, value_col: str,
     return agg.select(F.round(u1, 6).alias("u1"),
                       F.round(u2, 6).alias("u2"),
                       F.round(z, 6).alias("z"))
-
-
-def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mannWhitneyUTest surface: rank-compare l_quantity (discrete
-    1..50 -- exactly the tied-rank case the correction exists for)
-    between the 'O' and 'F' line statuses."""
-    li = _t(spark, sf_dir, "lineitem")
-    return mann_whitney_u(li, "l_quantity", "l_linestatus", "O", "F")
 
 
 _MANN_WHITNEY_SQL = """
@@ -890,14 +711,6 @@ def kolmogorov_smirnov(df: DataFrame, value_col: str,
         F.round(scale * F.col("d"), 6).alias("d_scaled"))
 
 
-def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kolmogorovSmirnovTest surface: compare the l_quantity
-    distribution between 'O' and 'F' line statuses."""
-    li = _t(spark, sf_dir, "lineitem")
-    return kolmogorov_smirnov(li, "l_quantity", "l_linestatus",
-                              "O", "F")
-
-
 _KS_SQL = """
 WITH vals AS (
   SELECT CAST(l_quantity AS DOUBLE) AS v,
@@ -959,15 +772,6 @@ def simple_linear_regression(df: DataFrame, group_cols: list[str],
                       F.round(slope, 6).alias("slope"),
                       F.round(intercept, 6).alias("intercept"),
                       F.round(bratio, 6).alias("bounding_ratio"))
-
-
-def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """simpleLinearRegression + boundingRatio surface: price vs
-    quantity per return flag."""
-    li = _t(spark, sf_dir, "lineitem").withColumn(
-        "__tb", F.col("l_orderkey") * 8 + F.col("l_linenumber"))
-    return simple_linear_regression(
-        li, ["l_returnflag"], "l_quantity", "l_extendedprice", "__tb")
 
 
 _REGRESSION_SQL = """
@@ -1175,18 +979,6 @@ def quantile_exact_weighted(df: DataFrame, group_cols: list[str],
           for lv in levels])
 
 
-def agg_weighted_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """quantileExactWeighted surface: quantity-weighted exact price
-    percentiles per return flag (each price weighted by the line's
-    quantity -- the 'typical unit price' a plain percentile
-    misstates). Values are INPUT values, not interpolations, so the
-    oracle hash-matches with no rounding."""
-    li = _t(spark, sf_dir, "lineitem")
-    return quantile_exact_weighted(
-        li, ["l_returnflag"], "l_extendedprice", "l_quantity",
-        [0.5, 0.9])
-
-
 _WEIGHTED_PCTL_SQL = """
 SELECT l_returnflag,
        MIN(CASE WHEN cum >= 0.5 * tot THEN px END) AS wp50,
@@ -1256,25 +1048,6 @@ SELECT l_suppkey, l_orderkey, l_linenumber,
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
          AS DOUBLE) AS running_rev
 FROM lineitem
-"""
-
-
-def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc())
-    return ev.select(
-        "user_id", "event_id",
-        F.lag("event_type", 1).over(w).alias("prev_type"),
-        F.lead("event_type", 1).over(w).alias("next_type"))
-
-
-_LAG_SQL = """
-SELECT user_id, event_id,
-       LAG(event_type, 1)  OVER w AS prev_type,
-       LEAD(event_type, 1) OVER w AS next_type
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
 """
 
 
@@ -1407,23 +1180,6 @@ SELECT n_name FROM nation WHERE n_regionkey >= 1
 
 # --- distinct aggregation ---------------------------------------------------
 
-def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.groupBy("l_returnflag")
-              .agg(F.countDistinct("l_partkey").alias("n_parts"),
-                   F.countDistinct("l_suppkey").alias("n_supps"),
-                   F.count(F.lit(1)).alias("n_rows")))
-
-
-_DISTINCT_SQL = """
-SELECT l_returnflag,
-       COUNT(DISTINCT l_partkey) AS n_parts,
-       COUNT(DISTINCT l_suppkey) AS n_supps,
-       COUNT(*) AS n_rows
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
 def approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HLL++). Estimates are engine-specific;
     the registered query (distinct_vs_approx) bands the estimate
@@ -1500,36 +1256,6 @@ SELECT 'anti', c_custkey, c_name FROM ({_ANTI_SQL})
 """
 
 
-def agg_histogram(spark: SparkSession, sf_dir: str,
-                  n_bins: int = 10) -> DataFrame:
-    """Equi-width histogram over l_extendedprice (the sink DB's
-    histogram() surface, fixed-bin form): bounds come from one 1-row
-    MIN/MAX aggregate broadcast against the scan (no driver action),
-    bin assignment is floor((x-lo)/width) clamped to the top bin, and
-    the result is one keyed count per bin -- two passes over the
-    column, both map-side-combined. The bin arithmetic is plain IEEE
-    double math evaluated in the same order on any engine, so the
-    oracle reproduces the exact assignment."""
-    li = _t(spark, sf_dir, "lineitem")
-    x = F.col("l_extendedprice").cast("double")
-    bounds = li.agg(F.min(x).alias("lo"), F.max(x).alias("hi"))
-    width = (F.col("hi") - F.col("lo")) / n_bins
-    return (li.select(x.alias("x"))
-            .crossJoin(F.broadcast(bounds))
-            .withColumn("bin", F.least(
-                F.floor((F.col("x") - F.col("lo")) / width),
-                F.lit(n_bins - 1)).cast("int"))
-            .groupBy("bin", "lo", "hi")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select("bin", "n",
-                    F.round(F.col("lo") + F.col("bin")
-                            * ((F.col("hi") - F.col("lo")) / n_bins),
-                            6).alias("bin_lo"),
-                    F.round(F.col("lo") + (F.col("bin") + 1)
-                            * ((F.col("hi") - F.col("lo")) / n_bins),
-                            6).alias("bin_hi")))
-
-
 def agg_grouping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP + CUBE + GROUPING SETS + statistical aggregates
     (percentile/corr/stddev) + equi-width histogram +
@@ -1567,15 +1293,12 @@ def agg_grouping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream relation is cardinality-bounded (cells/fl/cells_o are
     category-sized), so the fusion holds at any data scale.
 
-    Materialization policy (_pin_if_split_rich): on a split-rich
-    cluster table the three shared relations are eagerly pinned so
-    each consumer pays the scan once; on the split-starved local
-    fixtures they stay lazy -- branch recomputes of a page-cached
-    single-task scan are nearly free and each pin would cost a whole
-    extra job floor (a .cache() variant also measured ~2.5s slower
-    cache-cold: in-memory materialization serializes inside the AQE
-    stage waves of the 11-branch union). Same expressions, same
-    values, one oracle either way."""
+    The three shared relations stay lazy: branch recomputes of a
+    page-cached scan are cheap, while an eager localCheckpoint pin
+    cost ~4.8 s of extra build jobs at sf0.1 to save ~1 s of
+    recompute, and a .cache() variant measured ~2.5 s slower
+    cache-cold (in-memory materialization serializes inside the AQE
+    stage waves of the 11-branch union)."""
     nd = F.lit(None).cast("double")
     li = _t(spark, sf_dir, "lineitem")
     x9 = F.col("l_extendedprice").cast("decimal(9,2)")
@@ -1583,14 +1306,13 @@ def agg_grouping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     xd = F.col("l_extendedprice").cast("double")
 
     # ---- shared scan 1: (l_returnflag, l_linestatus) cells --------
-    cells = _pin_if_split_rich(
-        li.groupBy("l_returnflag", "l_linestatus")
-          .agg(F.count(F.lit(1)).alias("n"),
-               F.sum(F.col("l_quantity").cast(_DEC)).alias("sq"),
-               F.sum(x9).alias("s1"),
-               F.sum(x2).alias("s2"),
-               F.min(xd).alias("plo"),
-               F.max(xd).alias("phi")), li)
+    cells = (li.groupBy("l_returnflag", "l_linestatus")
+               .agg(F.count(F.lit(1)).alias("n"),
+                    F.sum(F.col("l_quantity").cast(_DEC)).alias("sq"),
+                    F.sum(x9).alias("s1"),
+                    F.sum(x2).alias("s2"),
+                    F.min(xd).alias("plo"),
+                    F.max(xd).alias("phi")))
 
     rollup = (cells.rollup("l_returnflag", "l_linestatus")
               .agg(F.sum("n").alias("n"),
@@ -1700,7 +1422,7 @@ def agg_grouping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all-spread 4.5-4.8 s, fl-spread 2.3-2.8 s) -- the other branches
     # already fill the cores and their per-branch exchanges are pure
     # overhead.
-    fl = _pin_if_split_rich(
+    fl = (
         _t(spark, sf_dir, "lineitem", spread=True)
           .groupBy("l_returnflag")
           .agg(F.count(F.lit(1)).alias("n"),
@@ -1713,8 +1435,7 @@ def agg_grouping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.max_by(xd, key).alias("y_hi"),
                F.min_by(xd, key).alias("y_lo"),
                F.max(F.col("l_quantity").cast("double")).alias("x_hi"),
-               F.min(F.col("l_quantity").cast("double")).alias("x_lo")),
-        li)
+               F.min(F.col("l_quantity").cast("double")).alias("x_lo")))
 
     # ONE sort serves BOTH percentile parts (r15, guide §2.4 "two
     # operations keyed the same way can share one exchange"): the
@@ -1839,11 +1560,10 @@ def agg_grouping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- shared scan 3: orders cells (cube + grouping sets) --------
     orders = _t(spark, sf_dir, "orders")
-    cells_o = _pin_if_split_rich(
-        orders.groupBy("o_orderstatus", "o_orderpriority")
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.sum(F.col("o_totalprice").cast(_DEC)).alias("sp")),
-        orders)
+    cells_o = (orders.groupBy("o_orderstatus", "o_orderpriority")
+                     .agg(F.count(F.lit(1)).alias("n"),
+                          F.sum(F.col("o_totalprice").cast(_DEC))
+                           .alias("sp")))
     cube = (cells_o.cube("o_orderstatus", "o_orderpriority")
             .agg(F.sum("n").alias("n"),
                  F.round(F.sum("sp"), 2).cast("double")

@@ -23,147 +23,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-# F1: ENUM decode (1-based; 0/out-of-range -> '')
-def t_enum_decode(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    idx = (F.col("event_id") % 5).cast("int")   # 0..4; 0 and 4 invalid
-    return ev.select("event_id",
-                     X.enum_decode(idx, _ENUM_LABELS).alias("enum_label"))
-
-
-_ENUM_SQL = """
-SELECT event_id,
-       CASE (event_id % 5) WHEN 1 THEN 'e1' WHEN 2 THEN 'e2'
-                           WHEN 3 THEN 'e3' ELSE '' END AS enum_label
-FROM events
-"""
-
-
-# F2: SET decode (bitmask -> csv of labels)
-def t_set_decode(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    mask = F.col("event_id") % 8
-    return ev.select("event_id",
-                     X.set_decode(mask, _SET_LABELS).alias("set_csv"))
-
-
-_SET_SQL = """
-SELECT event_id,
-       concat_ws(',',
-         CASE WHEN ((event_id % 8) & 1) <> 0 THEN 'a' END,
-         CASE WHEN ((event_id % 8) & 2) <> 0 THEN 'b' END,
-         CASE WHEN ((event_id % 8) & 4) <> 0 THEN 'c' END) AS set_csv
-FROM events
-"""
-
-
-# F3: BIT decode ('\x01' byte from dump path -> 1, other strings -> 0)
-def t_bit_decode(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    raw = F.when(F.col("event_id") % 2 == 1, F.char(F.lit(1))) \
-           .otherwise(F.char(F.lit(2)))
-    return ev.select("event_id", X.bit_decode(raw).alias("bit_val"))
-
-
-_BIT_SQL = """
-SELECT event_id,
-       CASE WHEN (CASE WHEN event_id % 2 = 1 THEN chr(1) ELSE chr(2) END)
-            = chr(1) THEN 1 ELSE 0 END AS bit_val
-FROM events
-"""
-
-
-# F6/F9: DATE parse with zero-date and garbage -> NULL
-def t_date_parse(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    raw = (F.when(F.col("event_id") % 10 == 0, F.lit("0000-00-00"))
-            .when(F.col("event_id") % 10 == 1, F.lit("not-a-date"))
-            .otherwise(F.date_format("ts", "yyyy-MM-dd")))
-    return ev.select("event_id", X.date_parse(raw).alias("d"))
-
-
-_DATE_SQL = """
-SELECT event_id,
-       CAST(try_strptime(
-         CASE WHEN event_id % 10 = 0 THEN '0000-00-00'
-              WHEN event_id % 10 = 1 THEN 'not-a-date'
-              ELSE strftime(ts, '%Y-%m-%d') END,
-         '%Y-%m-%d') AS DATE) AS d
-FROM events
-"""
-
-
-# DATETIME parse with zero-datetime -> NULL
-def t_datetime_parse(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    raw = (F.when(F.col("event_id") % 10 == 0,
-                  F.lit("0000-00-00 00:00:00"))
-            .otherwise(F.date_format("ts", "yyyy-MM-dd HH:mm:ss")))
-    return ev.select("event_id", X.datetime_parse(raw).alias("dt"))
-
-
-_DATETIME_SQL = """
-SELECT event_id,
-       try_strptime(
-         CASE WHEN event_id % 10 = 0 THEN '0000-00-00 00:00:00'
-              ELSE strftime(ts, '%Y-%m-%d %H:%M:%S') END,
-         '%Y-%m-%d %H:%M:%S') AS dt
-FROM events
-"""
-
-
-# F7: ',list' transform (csv -> array); scalar projections for the oracle
-def t_csv_to_list(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    csv = F.concat_ws(",", F.col("event_type"),
-                      F.col("user_id").cast("string"), F.lit("tail"))
-    arr = X.csv_to_list(csv)
-    return ev.select(
-        "event_id",
-        F.size(arr).alias("n_parts"),
-        F.get(arr, 0).alias("part1"),
-        F.get(arr, 1).alias("part2"),
-        F.array_join(arr, "|").alias("joined"),
-    )
-
-
-_CSV_SQL = """
-SELECT event_id,
-       len(parts) AS n_parts, parts[1] AS part1, parts[2] AS part2,
-       array_to_string(parts, '|') AS joined
-FROM (SELECT event_id,
-             string_split(event_type || ',' || user_id || ',tail', ',') AS parts
-      FROM events)
-"""
-
-
-# F8: ',date' transform (unix seconds -> timestamp)
-def t_unix_to_ts(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    secs = F.lit(1700000000) + F.col("event_id") * 3600
-    return ev.select("event_id", X.unix_to_ts(secs).alias("t"))
-
-
-_UNIX_SQL = """
-SELECT event_id,
-       CAST(to_timestamp(1700000000 + event_id * 3600) AS TIMESTAMP) AS t
-FROM events
-"""
-
-
-# F5: JSON extraction
-def t_json_get(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    return ev.select(
-        "event_id",
-        X.json_get("props", "$.k").cast("int").alias("k"))
-
-
-_JSON_SQL = """
-SELECT event_id, CAST(props->>'$.k' AS INT) AS k FROM events
-"""
-
-
 # F10 + UInt64 safety: int normalization incl. beyond-int32 values.
 # big_u64 is DECIMAL(20,0) internally (full uint64 range) but rendered
 # as a string here: the driver's pandas value-hash treats Decimal
@@ -183,21 +42,6 @@ _INT_SQL = """
 SELECT event_id,
        CAST(FLOOR(value) AS BIGINT) AS value_i64,
        CAST(CAST(user_id + 3748168280 AS DECIMAL(20,0)) AS VARCHAR) AS big_u64
-FROM events
-"""
-
-
-# F5 (typed): from_json into a typed struct, not just path extraction
-def t_json_struct(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    parsed = F.from_json("props", "k INT")
-    return ev.select("event_id", parsed.getField("k").alias("k"),
-                     F.isnotnull(parsed).alias("valid_json"))
-
-
-_JSON_STRUCT_SQL = """
-SELECT event_id, CAST(props->>'$.k' AS INT) AS k,
-       (json_valid(props)) AS valid_json
 FROM events
 """
 
@@ -246,41 +90,14 @@ FROM orders
 """
 
 
-# array / map built-ins over the csv list transform's output.
-# Array outputs are scalarized (array_join) -- the driver's pandas
-# canonicalizer cannot hash raw list cells (round-1 err row).
-def t_array_map_ops(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    arr = F.split(F.concat_ws(",", "event_type", "event_type"), ",")
-    return ev.select(
-        "event_id",
-        F.size(arr).alias("n_el"),
-        F.array_contains(arr, "click").alias("has_click"),
-        F.array_join(F.sort_array(F.array_distinct(arr)), "|")
-         .alias("distinct_sorted"),
-        F.element_at(F.create_map(F.lit("t"), F.col("event_type")), "t")
-         .alias("map_val"),
-    )
-
-
-_ARRAY_MAP_SQL = """
-SELECT event_id,
-       2 AS n_el,
-       (event_type = 'click') AS has_click,
-       event_type AS distinct_sorted,
-       event_type AS map_val
-FROM events
-"""
-
-
 # ---------------------------------------------------------------------------
 # merged registry queries
 #
 # The driver's correctness gate evaluates at most 50 registry entries,
 # so per-transform queries over the SAME base table are merged into
-# wide single-scan selects; the standalone functions above stay as the
-# unit-testable building blocks (tests/test_transforms.py and the
-# hypothesis suite exercise them directly).
+# wide single-scan selects. The transforms themselves live in
+# functions/transforms.py, where tests/test_transforms.py and the
+# hypothesis suite exercise them directly.
 # ---------------------------------------------------------------------------
 
 # S6 type-map cases: representative MySQL column types covering every
@@ -309,9 +126,11 @@ _TYPEMAP_CASES = (
 def t_mysql_scalars(spark, sf_dir):
     """F1 enum + F2 set + F3 bit + F6/F9 zero-date guards + F8 unix->ts
     + F5 json (path + typed struct) + the S6 MySQL->ClickHouse type map
-    in one scan of `events`: each column is the same expression as its
-    standalone query; `ch_type` runs mysql_to_clickhouse_type (the
-    sink auto-DDL mapper) over the _TYPEMAP_CASES row by row."""
+    in one scan of `events`: each column applies one functions/
+    transforms.py transform to an input derived from `event_id`, `ts`
+    or `props` (the oracle restates the same derivation); `ch_type`
+    runs mysql_to_clickhouse_type (the sink auto-DDL mapper) over the
+    _TYPEMAP_CASES row by row."""
     from ..functions.typemap import mysql_to_clickhouse_type
     ev = _events(spark, sf_dir)
     ch_types = F.array(*[F.lit(mysql_to_clickhouse_type(c))

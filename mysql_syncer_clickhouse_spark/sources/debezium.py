@@ -212,10 +212,6 @@ def read_debezium_kafka(spark: SparkSession, bootstrap_servers: str,
     return parse_debezium(lines, row_ddl)
 
 
-SCHEMA_CHANGE_DDL = ("seq long, ts timestamp, db string, "
-                     "table string, query string")
-
-
 def parse_debezium_schema_change(lines: DataFrame) -> DataFrame:
     """Debezium's SCHEMA-CHANGE topic (the history/schema-change
     stream a MySQL connector publishes alongside row topics): each

@@ -95,8 +95,12 @@ class NearDupIngestPipeline:
         if n_in == 0:
             self.metrics.epochs += 1
             return
+        # a NULL text bands to NULL signatures, which no (band,
+        # band_sig) equi-join can match: the doc is kept, and its rows
+        # would only grow the state
         bands = band_signatures(batch_df, "doc_id", "text",
-                                self.shingle_k)
+                                self.shingle_k) \
+            .filter(F.col("band_sig").isNotNull())
         # small-batch state: the per-epoch relation is bounded by
         # maxFilesPerTrigger, reused three times below
         bands = bands.localCheckpoint(eager=True)

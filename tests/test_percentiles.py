@@ -69,14 +69,6 @@ def test_range_shape_parallelism_scales_with_buckets(spark):
     assert "__b" not in wplan
 
 
-def test_env_override_forces_range(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_PCTL_RANGE", "1")
-    df = _fixture(spark, n=500)
-    plan = exact_group_percentiles(df, "g", "v", [0.5]) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "__b" in plan                    # bucketed shape engaged
-
-
 def test_null_values_ignored_like_builtin(spark):
     """NULLs must be ignored (Spark percentile() semantics) in BOTH
     shapes -- unfiltered they would occupy ranks and shift every

@@ -849,3 +849,22 @@ def test_exponential_time_decayed_avg(spark):
     import pytest
     with pytest.raises(ValueError):
         exponential_time_decayed_avg(df, "g", "t", "v", halflife_s=0)
+
+
+def test_agg_grouping_stats_shared_relations_stay_lazy(spark, sf_dir,
+                                                        monkeypatch):
+    """agg_grouping_stats' shared relations (cells, fl, cells_o) stay
+    lazy whatever the source layout: no eager localCheckpoint, so the
+    analyzed plan holds no pinned RDD. Every scan is repartitioned to
+    the session's core count here -- the split-rich layout a cluster
+    table presents."""
+    from mysql_syncer_clickhouse_spark.sources.tables import load_table
+
+    def split_rich(spark, sf_dir, name, spread=False):
+        return load_table(spark, sf_dir, name).repartition(
+            spark.sparkContext.defaultParallelism)
+
+    monkeypatch.setattr(relational, "_t", split_rich)
+    df = relational.agg_grouping_stats(spark, sf_dir)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan

@@ -136,6 +136,31 @@ def test_neardup_replay_does_not_self_collide(spark, dirs):
     assert pipe.metrics.dropped_neardup == 0
 
 
+def test_null_text_doc_is_kept_without_state_rows(spark, dirs):
+    """A NULL-text document bands to NULL signatures, which can never
+    match in the (band, band_sig) join: it is kept, and none of its
+    rows reach the band state, in either of two epochs."""
+    t0 = _ts(spark, "2026-01-01 10:00:00")
+    pipe = _pipe(dirs)
+    _write_part(spark, dirs["src"], [
+        (1, "web", BASE, t0),
+        (2, "web", None, t0),
+    ], "p1")
+    _write_part(spark, dirs["src"], [
+        (3, "web", OTHER, t0),
+        (4, "web", None, t0),
+        (5, "web", NEAR, t0),       # cross-batch near-dup of 1
+    ], "p2")
+    _drain(pipe, spark, dirs["src"])
+
+    ids = {r["doc_id"] for r in pipe.corpus(spark).collect()}
+    assert ids == {1, 2, 3, 4}
+    state = spark.read.parquet(dirs["state"])
+    assert state.filter("band_sig IS NULL").count() == 0
+    assert {r["rep_id"] for r in state.select("rep_id")
+            .distinct().collect()} == {1, 3}
+
+
 def test_band_signatures_match_the_unfused_chain(spark):
     """The screen bands through the batch operator's fused path; its
     (id, band, band_sig) rows equal the unfused shingle-hash ->
