@@ -14,6 +14,8 @@ from pyspark.sql import SparkSession
 
 # the directory holding this package, for the Python workers' sys.path
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the module Spark runs as the Python worker daemon
+WORKER_DAEMON = "mysql_syncer_clickhouse_spark.worker_daemon"
 
 
 def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
@@ -54,7 +56,23 @@ def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
     package. Python UDFs pickle some package functions by reference,
     so a worker must be able to import the package; Spark joins this
     entry with the PYTHONPATH of the process that built the session,
-    so a session built from any directory works."""
+    so a session built from any directory works.
+
+    `spark.python.daemon.module` is this package's `worker_daemon`, a
+    static conf naming the module Spark runs as the Python worker
+    daemon. PySpark's worker calls `importlib.invalidate_caches()` at
+    the start of every task, and on CPython 3.11 each zip importer
+    then re-parses its archive's whole central directory: 16
+    importers for pyspark.zip's package directories (1,328 entries)
+    plus py4j's zip, about 0.19 CPU-s per task before any user code.
+    The daemon re-reads an archive only when its inode, size or mtime
+    changed, then runs PySpark's own daemon, whose forked workers
+    inherit the guard. With an identity UDF over 1,000 rows in 2
+    partitions on local[2] (4 vCPUs), worker CPU per job went 0.39 ->
+    0.064 s with `mapInPandas`, 0.40 -> 0.063 s with `mapInArrow` and
+    0.27 -> 0.12 s with `applyInPandas` over 100 groups. On a CPython
+    whose zip invalidation is already lazy the guard only adds one
+    `stat` per importer per task."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
@@ -72,6 +90,7 @@ def get_spark(app_name: str = "mysql_syncer_clickhouse_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        .config("spark.python.daemon.module", WORKER_DAEMON)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()
     )
