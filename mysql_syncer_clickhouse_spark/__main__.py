@@ -139,12 +139,14 @@ def _attach_ch_sink(cfg: EngineConfig, pipe: StreamingSyncPipeline,
 
 
 def _build_ch_sink(cfg: EngineConfig, db: str, table: str,
-                   cols, pk: tuple):
+                   cols, pk: tuple, *, url: str | None = None):
     """sink_addr -> a ClickHouse sink object: native TCP for
     host:port (the reference's own transport, clickhouse/client.go),
-    the HTTP writer for http(s):// URLs."""
-    addr = cfg.sink_addr
-    if addr.startswith(("http://", "https://")):
+    the HTTP writer for http(s):// URLs. An explicit `url`
+    (--checksum-url) overrides sink_addr with an HTTP endpoint. The
+    one place a sink address becomes a wire."""
+    addr = url or cfg.sink_addr
+    if url or addr.startswith(("http://", "https://")):
         from .sinks.clickhouse import ClickHouseHTTPSink
         return ClickHouseHTTPSink(
             url=addr, database=db, table=table, columns=cols, pk=pk,
@@ -748,7 +750,6 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
     from pyspark.sql import functions as F
 
     from .operators import syncverify as sv
-    from .sinks.verify_transport import transport_for
 
     spark = spark or get_spark("mysql-syncer-clickhouse-spark",
                                cpus=cfg.threads)
@@ -777,7 +778,6 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
                 f"{e}; delete it to restart the rotation at K=0"
             ) from None
         sample = (m, int(rotation_state.get(str(m), 0)) % m)
-    make_transport = transport_for(cfg, checksum_url, required=False)
     env_batch = None
     available: list | None = []
     if binlog_dir:
@@ -828,7 +828,7 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
                           "source stream; declare an explicit "
                           "[[rule]] with id = [...] for this table")})
             continue
-        if make_transport is None:
+        if not (checksum_url or cfg.sink_addr):
             # FILE-sink verification (no ClickHouse configured -- the
             # engine's DEFAULT sink is a parquet changelog directory,
             # and it deserves the same check): both sides reduce to
@@ -881,21 +881,21 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
             continue
         expected = sv.final_state_with_tombstones(projected, pk)
 
-        transport = make_transport(rule.sink_schema, rule.sink_table,
-                                   tuple(pk))
+        sink = _build_ch_sink(cfg, rule.sink_schema, rule.sink_table,
+                              [], tuple(pk), url=checksum_url)
         line: dict = {"rule": rule.key, "mode": "checksum",
                       "sink": f"{rule.sink_schema}.{rule.sink_table}",
-                      "transport": transport.kind,
+                      "transport": sink.kind,
                       "buckets": buckets}
         try:
-            ch_types = dict(transport.describe_columns())
-        except transport.errors as e:
+            ch_types = dict(sink.describe_columns())
+        except sink.errors as e:
             line["error"] = f"sink introspection failed: {e}"
             results.append(line)
             continue
         try:
-            engine = transport.table_engine()
-        except transport.errors:
+            engine = sink.table_engine()
+        except sink.errors:
             engine = None              # system.tables restricted: ok
         if engine and any(s in engine for s in
                           ("Collapsing", "Summing", "Aggregating")):
@@ -940,14 +940,14 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
             src_rows = sv.spark_pushdown_digest(
                 exp_common, columns, pk, buckets,
                 sample=sample).collect()
-            dst_rows = transport.digest(
+            dst_rows = sink.digest(
                 columns, pk, buckets, final=final,
                 binary_cols=binary_cols, sample=sample)
         except ValueError as e:      # renderer refusal, with remedy
             line["error"] = str(e)
             results.append(line)
             continue
-        except transport.errors as e:
+        except sink.errors as e:
             # a real server rejects FINAL on a plain-MergeTree sink,
             # among other per-table failures -- surface per rule with
             # the remedy instead of crashing the whole run
@@ -978,7 +978,7 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
             # the finding and moves on -- the digest verdict above
             # already stands
             try:
-                dst = transport.read_back(
+                dst = sink.read_back(
                     spark, exp_common.schema,
                     split_expr=sv.clickhouse_bucket_sql(
                         pk_pairs, buckets, binary_cols),
@@ -997,7 +997,7 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
                 line["deep_error"] = str(e)
                 results.append(line)
                 continue
-            except transport.errors as e:
+            except sink.errors as e:
                 line["deep_error"] = f"sink read-back failed: {e}"
                 results.append(line)
                 continue
@@ -1006,7 +1006,7 @@ def run_checksum(cfg: EngineConfig, *, changelog_dir: str | None = None,
                     diff_rows, rule.sink_schema, rule.sink_table, pk,
                     engine=engine)
                 if execute:
-                    transport.execute_repairs(
+                    sink.execute_repairs(
                         stmts, columns, exp_common.schema)
                 line["repair"] = stmts
                 line["repair_executed"] = execute

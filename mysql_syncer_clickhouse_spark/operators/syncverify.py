@@ -37,8 +37,9 @@ Two execution modes:
 
 - **Spark mode** (default): both sides are DataFrames (parquet sink,
   or a ClickHouse table read back through
-  `sinks.clickhouse_read.read_clickhouse_http`); fingerprints are
-  `xxhash64(...)` -- pure JVM, whole-stage codegen, zero Python.
+  `ClickHouseHTTPSink.read_back` / `ClickHouseNativeSink.read_back`);
+  fingerprints are `xxhash64(...)` -- pure JVM, whole-stage codegen,
+  zero Python.
 - **Pushdown mode**: the ClickHouse side never ships rows at all --
   `clickhouse_digest_sql` emits ONE aggregate query the server runs
   data-resident (`cityHash64` over a canonical row rendering,

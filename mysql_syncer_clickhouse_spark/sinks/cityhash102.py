@@ -22,9 +22,8 @@ Two implementations live here:
   compiled path is CROSS-VALIDATED against the pure-Python reference
   over a battery of lengths spanning every algorithm branch (0..16,
   murmur 17..127, >=128 with all four tail residues); any mismatch or
-  compile failure falls back to pure Python silently, so a missing
-  gcc degrades throughput, never correctness.
-  ``MSC_SPARK_PURE_CITYHASH=1`` forces the fallback.
+  compile failure falls back to pure Python with one warning, so a
+  missing gcc degrades throughput, never correctness.
 
 ``checksum16`` (what the native sink frames with) dispatches to the
 fastest validated path. There is no live ClickHouse in this sandbox to
@@ -433,39 +432,35 @@ def _native_fn():
     global _NATIVE, _NATIVE64, _NATIVE_TRIED
     if not _NATIVE_TRIED:
         _NATIVE_TRIED = True
-        if os.environ.get("MSC_SPARK_PURE_CITYHASH") != "1":
-            try:
-                built = _compile_native()
-                if built is not None:
-                    fn, fn64 = built
-                    if _validate_native(fn):
-                        _NATIVE = fn
-                    if _validate_native64(fn64):
-                        _NATIVE64 = fn64
-            except Exception:
-                _NATIVE = None
-                _NATIVE64 = None
-            if _NATIVE is None:
-                # VERDICT r10 ask #3: the ~1000x throughput regime
-                # change must be VISIBLE, not silent -- correctness is
-                # unaffected, so a warning (not an error) once per
-                # process. The explicit env opt-out stays quiet.
-                logging.getLogger(__name__).warning(
-                    "cityhash102: compiled twin unavailable (no C "
-                    "compiler / build or validation failure); native "
-                    "sink checksums fall back to pure Python "
-                    "(~3.6 MB/s/core vs multi-GB/s). Set "
-                    "MSC_SPARK_PURE_CITYHASH=1 to opt in silently.")
-            elif _NATIVE64 is None:
-                # same visibility policy for the 64-bit batch entry:
-                # it can fail validation independently of the 128-bit
-                # path, and it IS the checksum hot path
-                logging.getLogger(__name__).warning(
-                    "cityhash102: 64-bit batch entry failed "
-                    "validation; sync-verify digests fall back to "
-                    "pure Python (~1000x slower on the checksum hot "
-                    "path). Set MSC_SPARK_PURE_CITYHASH=1 to opt in "
-                    "silently.")
+        try:
+            built = _compile_native()
+            if built is not None:
+                fn, fn64 = built
+                if _validate_native(fn):
+                    _NATIVE = fn
+                if _validate_native64(fn64):
+                    _NATIVE64 = fn64
+        except Exception:
+            _NATIVE = None
+            _NATIVE64 = None
+        if _NATIVE is None:
+            # the ~1000x throughput regime change must be VISIBLE,
+            # not silent -- correctness is unaffected, so a warning
+            # (not an error) once per process
+            logging.getLogger(__name__).warning(
+                "cityhash102: compiled twin unavailable (no C "
+                "compiler / build or validation failure); native "
+                "sink checksums fall back to pure Python "
+                "(~3.6 MB/s/core vs multi-GB/s).")
+        elif _NATIVE64 is None:
+            # same visibility policy for the 64-bit batch entry:
+            # it can fail validation independently of the 128-bit
+            # path, and it IS the checksum hot path
+            logging.getLogger(__name__).warning(
+                "cityhash102: 64-bit batch entry failed "
+                "validation; sync-verify digests fall back to "
+                "pure Python (~1000x slower on the checksum hot "
+                "path).")
     return _NATIVE
 
 

@@ -17,6 +17,11 @@ equivalent:
   request up to max_insert_block_size, and the ReplacingMergeTree sink
   dedups replayed epochs by (pk, seq) order -- the same at-least-once-
   then-idempotent contract as the parquet changelog sink.
+- The --checksum half of the wire: `digest()` runs the server-resident
+  bucket aggregate as TabSeparated, `read_back()` is the symmetric
+  distributed read (one task per hash slice, JSONEachRow parsed
+  executor-side; binary columns ride as hex), and `execute_repairs()`
+  runs the repair SQL, rewriting binary re-INSERTs to VALUES/unhex.
 
 Transport is stdlib urllib (the documented public HTTP protocol,
 default port 8123): no driver library needed. Point `url` at a real
@@ -27,15 +32,20 @@ ClickHouse in this sandbox.
 
 from __future__ import annotations
 
+import base64
 import json
+import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Sequence
 from dataclasses import dataclass, field
+from datetime import date, datetime
+from decimal import Decimal
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-from ..functions.typemap import clickhouse_create_table_ddl
+from . import ClickHouseTable
 
 
 def _post(url: str, query: str, body: bytes = b"",
@@ -63,13 +73,98 @@ def _row_to_json(row) -> str:
     return json.dumps(row.asDict(recursive=True), default=str)
 
 
+def _coercer(dt: T.DataType):
+    """JSON value -> Spark-compatible Python value for one field of
+    the read-back. Arrays and maps recurse (JSONEachRow round-trips
+    them as JSON lists/objects).  64-bit integers may arrive quoted
+    (output_format_json_quote_64bit_integers=1); DateTime renders in
+    SERVER timezone.  Binary columns arrive as HEX: JSON cannot carry
+    arbitrary bytes, so the read-back SELECT renders them `hex(col)`
+    (the same injective engine-neutral encoding the digest canonical
+    uses) and the coercer decodes -- which is what lets --deep drill
+    into binary columns over HTTP, not just native."""
+    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType,
+                       T.ByteType)):
+        return lambda v: None if v is None else int(v)
+    if isinstance(dt, T.DecimalType):
+        return lambda v: None if v is None else Decimal(str(v))
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return lambda v: None if v is None else float(v)
+    if isinstance(dt, T.BooleanType):
+        return lambda v: None if v is None else bool(v)
+    if isinstance(dt, T.DateType):
+        return lambda v: None if v is None else date.fromisoformat(v)
+    if isinstance(dt, T.TimestampType):
+        return (lambda v: None if v is None
+                else datetime.fromisoformat(v))
+    if isinstance(dt, T.StringType):
+        return lambda v: None if v is None else str(v)
+    if isinstance(dt, T.ArrayType):
+        elem = _coercer(dt.elementType)
+        return (lambda v: None if v is None
+                else [elem(x) for x in v])
+    if isinstance(dt, T.MapType):
+        key = _coercer(dt.keyType)
+        val = _coercer(dt.valueType)
+        return (lambda v: None if v is None
+                else {key(k): val(x) for k, x in v.items()})
+    if isinstance(dt, T.BinaryType):
+        return (lambda v: None if v is None
+                else bytearray(bytes.fromhex(v)))
+    raise ValueError(
+        f"ClickHouseHTTPSink.read_back: unsupported read-back type {dt}")
+
+
+def _values_literal(v, binary: bool = False) -> str:
+    """ONE JSON-payload value as a ClickHouse VALUES literal.  The
+    payload is to_json output, so the type space is JSON's (str/num/
+    bool/null/list/dict) plus base64 for binary."""
+    if v is None:
+        return "NULL"
+    if binary:
+        return f"unhex('{base64.b64decode(v).hex().upper()}')"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, (int, float)):
+        return repr(v)
+    if isinstance(v, list):
+        return "[" + ", ".join(_values_literal(x) for x in v) + "]"
+    if isinstance(v, dict):
+        return ("map(" + ", ".join(
+            f"{_values_literal(k)}, {_values_literal(x)}"
+            for k, x in v.items()) + ")")
+    s = str(v).replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{s}'"
+
+
+def _values_insert(statement: str, database: str, table: str,
+                   bin_cols: set) -> str:
+    """Rewrite a `INSERT ... FORMAT JSONEachRow {..}` repair statement
+    as `INSERT INTO t (cols) VALUES (..)` with unhex() for binary
+    columns -- the HTTP-executable form for payloads JSON cannot
+    carry as bytes."""
+    payload = json.loads(
+        statement.split("FORMAT JSONEachRow ", 1)[1])
+    names = list(payload)
+    cols = ", ".join(f"`{n}`" for n in names)
+    vals = ", ".join(
+        _values_literal(payload[n], binary=n in bin_cols)
+        for n in names)
+    return (f"INSERT INTO `{database}`.`{table}` ({cols}) "
+            f"VALUES ({vals})")
+
+
 @dataclass
-class ClickHouseHTTPSink:
-    """foreachBatch sink applying micro-batches to ClickHouse.
+class ClickHouseHTTPSink(ClickHouseTable):
+    """foreachBatch sink applying micro-batches to ClickHouse, and the
+    HTTP wire's one client for --apply-ddl, --retype and --checksum.
 
     columns: (name, mysql_type, nullable) triples -- the rule's source
-    schema, used only by ensure_table() to emit the auto-CREATE.
+    schema, used by ensure_table() to emit the auto-CREATE.
     """
+    kind = "http"
+    errors = (urllib.error.HTTPError, urllib.error.URLError, OSError)
+
     url: str
     database: str
     table: str
@@ -104,58 +199,78 @@ class ClickHouseHTTPSink:
     _known_cols: set[str] | None = field(default=None, repr=False)
 
     def execute(self, sql: str) -> bytes:
-        """Driver-side statement (DDL, ALTER on schema drift)."""
+        """Driver-side statement (DDL, ALTER on schema drift, repair)."""
         return _post(self.url, sql, b"", self.user, self.password)
 
-    def ensure_table(self) -> str:
-        """Run the reference's auto-CREATE (README.md:141-161) and
-        return the DDL that was executed."""
-        ddl = clickhouse_create_table_ddl(
-            self.database, self.table, list(self.columns), self.pk)
-        self.execute(ddl)
-        return ddl
+    def _select(self, sql: str) -> list[list[str]]:
+        body = self.execute(f"{sql} FORMAT TabSeparated")
+        return [line.split("\t") for line in body.decode().splitlines()
+                if line.strip()]
 
-    def describe_columns(self) -> list[tuple[str, str]]:
-        """The sink table's CURRENT (name, ClickHouse type) pairs,
-        from system.columns -- the introspection --retype keys its
-        String-fallback detection on."""
-        body = self.execute(
-            f"SELECT name, type FROM system.columns WHERE database = "
-            f"'{self.database}' AND table = '{self.table}' "
-            f"ORDER BY position FORMAT TabSeparated")
-        out = []
-        for line in body.decode().splitlines():
-            if line.strip():
-                name, typ = line.split("\t")[:2]
-                out.append((name, typ))
-        return out
+    def digest(self, columns, pk_cols, n_buckets, *, final,
+               binary_cols, sample) -> list[dict]:
+        """The server-resident bucket digest (operators/syncverify.py)
+        as TabSeparated rows."""
+        from ..operators import syncverify as sv
+        return sv.parse_digest_tsv(self.execute(sv.clickhouse_digest_sql(
+            self.database, self.table, columns, pk_cols, n_buckets,
+            final=final, binary_cols=binary_cols, sample=sample)))
 
-    def ensure_columns(self, batch_df: DataFrame) -> list[str]:
-        """Schema-drift handling (the reference re-introspects the
-        source on OnTableChanged, river/sync.go:54-60): columns that
-        appear mid-stream are added to the sink with ALTER TABLE ADD
-        COLUMN before the batch INSERT. New columns default to
-        Nullable(String) -- the reference's fallback mapping -- unless
-        a (name, mysql_type, nullable) triple was provided up front.
-        Returns the DDL statements executed (for logging/tests)."""
-        if self._known_cols is None:
-            self._known_cols = ({c[0] for c in self.columns}
-                                if self.columns else set(batch_df.columns))
-        typed = {c[0]: (c[1], c[2]) for c in self.columns}
-        ddls = []
-        for c in batch_df.columns:
-            if c in self._known_cols:
+    def read_back(self, spark, schema: T.StructType, split_expr: str,
+                  n_splits: int, *, split_values=None,
+                  final: bool = False) -> DataFrame:
+        """Read the table back as a DataFrame with `schema`: one Spark
+        task per split id, each posting `SELECT <cols> FROM t [FINAL]
+        WHERE <split_expr> = i FORMAT JSONEachRow` and parsing its own
+        slice executor-side -- the driver never sees a row. Each
+        slice is a server-side scan unless `split_expr` matches the
+        table's ORDER BY prefix, so prefer more slices over one dump."""
+        cols = ", ".join(
+            f"hex(`{f.name}`) AS `{f.name}`"
+            if isinstance(f.dataType, T.BinaryType) else f"`{f.name}`"
+            for f in schema.fields)
+        head = (f"SELECT {cols} FROM `{self.database}`.`{self.table}`"
+                f"{' FINAL' if final else ''} WHERE ({split_expr}) = ")
+        names = [f.name for f in schema.fields]
+        coercers = {f.name: _coercer(f.dataType) for f in schema.fields}
+        url, user, password = self.url, self.user, self.password
+
+        def fetch(batches):
+            import pandas as pd
+            for pdf in batches:
+                for i in pdf["id"]:
+                    body = _post(url, f"{head}{int(i)} FORMAT JSONEachRow",
+                                 b"", user, password, timeout=120)
+                    rows = [json.loads(line)
+                            for line in body.decode().splitlines()
+                            if line.strip()]
+                    data = {n: [coercers[n](r.get(n)) for r in rows]
+                            for n in names}
+                    yield pd.DataFrame(data, columns=names, dtype=object)
+
+        return self._split_ids(spark, n_splits, split_values).mapInPandas(
+            fetch, schema=schema)
+
+    def execute_repairs(self, stmts: list[dict], columns,
+                        spark_schema) -> None:
+        """`stmts` from syncverify.repair_statements: the emitted SQL
+        text IS this wire's executable form -- EXCEPT re-INSERTs
+        touching binary columns.  The diff's JSON payload renders
+        binary as base64 (Spark to_json), and JSONEachRow would store
+        that base64 TEXT into the column -- silent corruption.  Those
+        inserts rewrite to `INSERT ... VALUES` with `unhex('..')` for
+        the binary columns (the VALUES format evaluates expressions),
+        which round-trips the raw bytes over HTTP."""
+        bin_cols = {f.name for f in spark_schema.fields
+                    if isinstance(f.dataType, T.BinaryType)}
+        for stmt in stmts:
+            statement = stmt.get("statement")
+            if not statement:
                 continue
-            mtype, nullable = typed.get(c, ("text", True))
-            from ..functions.typemap import mysql_to_clickhouse_type
-            ddls.append(
-                f"ALTER TABLE `{self.database}`.`{self.table}` "
-                f"ADD COLUMN IF NOT EXISTS `{c}` "
-                f"{mysql_to_clickhouse_type(mtype, nullable)}")
-            self._known_cols.add(c)
-        for ddl in ddls:
-            self.execute(ddl)
-        return ddls
+            if bin_cols and statement.startswith("INSERT"):
+                statement = _values_insert(
+                    statement, self.database, self.table, bin_cols)
+            self.execute(statement)
 
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """foreachBatch target: INSERT the micro-batch as JSONEachRow

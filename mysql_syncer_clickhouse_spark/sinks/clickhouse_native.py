@@ -58,12 +58,18 @@ and streams its rows as native blocks of `bulk_size`, so nothing
 funnels through the driver. Epochs are serialized by foreachBatch;
 the ReplacingMergeTree (pk, seq) collapse dedups replays, the same
 at-least-once-then-idempotent contract as every other sink here.
+The read half (`NativeConnection.select_rows`) serves --checksum on
+this wire: the sink's `digest()`, `read_back()` (one task per hash
+slice, each with its own connection) and `execute_repairs()`.
 """
 
 from __future__ import annotations
 
+import base64
 import datetime
+import functools
 import ipaddress
+import json
 import re
 import socket
 import struct
@@ -73,10 +79,10 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-from ..functions.typemap import (clickhouse_create_table_ddl,
-                                 mysql_to_clickhouse_type,
-                                 split_type_args)
+from ..functions.typemap import mysql_to_clickhouse_type, split_type_args
+from . import ClickHouseTable
 from .cityhash102 import checksum16
 
 CLIENT_NAME = "mysql-syncer-clickhouse-spark"
@@ -1163,7 +1169,7 @@ class NativeConnection:
         results are bounded by construction (n_buckets digest rows /
         divergence-bounded drill-down slices), so accumulation is
         safe; this is NOT a bulk-export path -- read large tables back
-        through the distributed readers in sinks/clickhouse_read.py."""
+        through the sinks' distributed `read_back`."""
         self._send_query(sql, settings)
         cols: list[tuple[str, str]] = []
         rows: list[tuple] = []
@@ -1223,10 +1229,92 @@ class NativeConnection:
 
 # ------------------------------------------------------------------ sink
 
+def _open(host: str, port: int, database: str, user: str, password: str,
+          compression: "bool | str",
+          tls_cfg: "tuple[str | None, bool] | None") -> NativeConnection:
+    """A connection from picklable settings only -- what executor-side
+    closures (apply_batch, read_back) open, since an ssl.SSLContext
+    cannot travel into a Spark task."""
+    return NativeConnection(
+        host, port, database=database, user=user, password=password,
+        compression=compression,
+        ssl_context=(build_tls_context(*tls_cfg)
+                     if tls_cfg is not None else None))
+
+
+def _native_coercer(dt: T.DataType):
+    """Decoded native value -> Spark-compatible Python value for the
+    read-back. The native decoders already return typed values (int/
+    float/Decimal/date/datetime); the work here is the byte-transparent
+    String: utf-8 text for StringType, raw bytes for BinaryType (the
+    HTTP sink gets the same bytes via hex(col) + decode)."""
+    if isinstance(dt, T.StringType):
+        return (lambda v: None if v is None else
+                (v.decode("utf-8", errors="replace")
+                 if isinstance(v, (bytes, bytearray)) else str(v)))
+    if isinstance(dt, T.BinaryType):
+        return (lambda v: None if v is None else
+                (bytearray(v) if isinstance(v, (bytes, bytearray))
+                 else bytearray(str(v), "utf-8")))
+    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType,
+                       T.ByteType)):
+        return lambda v: None if v is None else int(v)
+    if isinstance(dt, T.DecimalType):
+        return (lambda v: None if v is None else
+                (v if isinstance(v, Decimal) else Decimal(str(v))))
+    if isinstance(dt, (T.DoubleType, T.FloatType)):
+        return lambda v: None if v is None else float(v)
+    if isinstance(dt, T.BooleanType):
+        return lambda v: None if v is None else bool(v)
+    if isinstance(dt, (T.DateType, T.TimestampType,
+                       T.TimestampNTZType)):
+        return lambda v: v
+    if isinstance(dt, T.ArrayType):
+        elem = _native_coercer(dt.elementType)
+        return (lambda v: None if v is None
+                else [elem(x) for x in v])
+    if isinstance(dt, T.MapType):
+        key = _native_coercer(dt.keyType)
+        val = _native_coercer(dt.valueType)
+        return (lambda v: None if v is None
+                else {key(k): val(x) for k, x in v.items()})
+    raise ValueError(
+        f"ClickHouseNativeSink.read_back: unsupported read-back type {dt}")
+
+
+def _json_coercer(dt: T.DataType):
+    """to_json-rendered value -> the typed Python value the native
+    encoders expect (repair rows ride as the drill-down's src_row
+    JSON; the HTTP sink hands that JSON straight to JSONEachRow, the
+    native sink re-types it here)."""
+    if isinstance(dt, T.DateType):
+        return (lambda v: None if v is None
+                else datetime.date.fromisoformat(v))
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        return (lambda v: None if v is None
+                else datetime.datetime.fromisoformat(
+                    v.replace("Z", "+00:00")).replace(tzinfo=None))
+    if isinstance(dt, T.DecimalType):
+        return lambda v: None if v is None else Decimal(str(v))
+    if isinstance(dt, T.BinaryType):
+        # to_json renders binary as base64
+        return (lambda v: None if v is None
+                else base64.b64decode(v))
+    return lambda v: v
+
+
 @dataclass
-class ClickHouseNativeSink:
-    """foreachBatch sink applying micro-batches over native TCP --
-    the same surface as ClickHouseHTTPSink, different wire."""
+class ClickHouseNativeSink(ClickHouseTable):
+    """foreachBatch sink applying micro-batches over native TCP, and
+    the native wire's one client for --apply-ddl, --retype and
+    --checksum -- the same surface as ClickHouseHTTPSink (both inherit
+    sinks.ClickHouseTable), different wire. --checksum's digest
+    SELECT, drill-down read-back and repairs all ride this wire, so a
+    native-only deployment verifies without an HTTP port, and binary
+    columns verify end-to-end (native String is byte-transparent)."""
+    kind = "native"
+    errors = (ClickHouseServerError, ConnectionError, OSError, ValueError)
+
     host: str
     port: int = 9000
     database: str = "default"
@@ -1289,6 +1377,20 @@ class ClickHouseNativeSink:
                                 compression=self.compression,
                                 ssl_context=ctx)
 
+    def _executor_connect(self):
+        """A picklable zero-argument opener for executor-side
+        connections."""
+        tls_cfg = self._tls_config()
+        if self.ssl_context is not None and tls_cfg is None:
+            raise ValueError(
+                "ClickHouseNativeSink: ssl_context cannot reach "
+                "executors (SSLContext is not picklable) -- configure "
+                "TLS for the distributed write path with secure=True / "
+                "ca_file= / tls_insecure= instead")
+        return functools.partial(
+            _open, self.host, self.port, self.database, self.user,
+            self.password, self.compression, tls_cfg)
+
     def execute(self, sql: str) -> None:
         conn = self._connect()
         try:
@@ -1296,30 +1398,14 @@ class ClickHouseNativeSink:
         finally:
             conn.close()
 
-    def ensure_table(self) -> str:
-        ddl = clickhouse_create_table_ddl(
-            self.database, self.table, list(self.columns), self.pk)
-        self.execute(ddl)
-        return ddl
-
-    def describe_columns(self) -> list[tuple[str, str]]:
-        """The sink table's CURRENT (name, ClickHouse type) pairs --
-        the introspection --retype keys its String-fallback detection
-        on. No SELECT result decoding needed: a zero-row INSERT
-        exchange's header block already carries every column's REAL
-        declared type (the same header the write path adopts), so the
-        query is INSERT -> header -> empty terminator -> EndOfStream."""
+    def _select(self, sql: str) -> list[tuple]:
         conn = self._connect()
         try:
-            conn._send_query(
-                f"INSERT INTO `{self.database}`.`{self.table}` VALUES")
-            conn._read_until(S_DATA)
-            header = conn._read_header_block()
-            conn.send_block([], [])
-            conn._read_until(S_END_OF_STREAM)
-            return list(header)
+            _, rows = conn.select_rows(sql)
         finally:
             conn.close()
+        return [tuple(v.decode() if isinstance(v, bytes) else v
+                      for v in r) for r in rows]
 
     def _ch_types(self, df_columns: list[str]) -> list[tuple[str, str]]:
         typed = {c[0]: (c[1], c[2]) for c in self.columns}
@@ -1330,27 +1416,6 @@ class ClickHouseNativeSink:
             out.append((c, mysql_to_clickhouse_type(
                 mtype, nullable and c not in nn)))
         return out
-
-    def ensure_columns(self, batch_df: DataFrame) -> list[str]:
-        """Mid-stream schema drift -> ALTER ADD COLUMN, same policy as
-        the HTTP sink (unknown columns land Nullable(String))."""
-        if self._known_cols is None:
-            self._known_cols = ({c[0] for c in self.columns}
-                                if self.columns else set(batch_df.columns))
-        typed = {c[0]: (c[1], c[2]) for c in self.columns}
-        ddls = []
-        for c in batch_df.columns:
-            if c in self._known_cols:
-                continue
-            mtype, nullable = typed.get(c, ("text", True))
-            ddls.append(
-                f"ALTER TABLE `{self.database}`.`{self.table}` "
-                f"ADD COLUMN IF NOT EXISTS `{c}` "
-                f"{mysql_to_clickhouse_type(mtype, nullable)}")
-            self._known_cols.add(c)
-        for ddl in ddls:
-            self.execute(ddl)
-        return ddls
 
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """foreachBatch target: each partition opens ONE connection and
@@ -1368,17 +1433,8 @@ class ClickHouseNativeSink:
         names = ", ".join(f"`{n}`" for n, _ in cols)
         sql = (f"INSERT INTO `{self.database}`.`{self.table}` "
                f"({names}) VALUES")
-        host, port = self.host, self.port
-        database, user, password = self.database, self.user, self.password
         bulk = self.bulk_size
-        compression = self.compression
-        tls_cfg = self._tls_config()
-        if self.ssl_context is not None and tls_cfg is None:
-            raise ValueError(
-                "ClickHouseNativeSink: ssl_context cannot reach "
-                "executors (SSLContext is not picklable) -- configure "
-                "TLS for the distributed write path with secure=True / "
-                "ca_file= / tls_insecure= instead")
+        connect = self._executor_connect()
         token_prefix = (f"{self.database}.{self.table}:{epoch_id}"
                         if self.dedup_tokens else None)
         sc = batch_df.sparkSession.sparkContext
@@ -1404,11 +1460,7 @@ class ClickHouseNativeSink:
                         yield buf
                         buf = []
                 yield buf
-            conn = NativeConnection(
-                host, port, database=database, user=user,
-                password=password, compression=compression,
-                ssl_context=(build_tls_context(*tls_cfg)
-                             if tls_cfg is not None else None))
+            conn = connect()
             try:
                 sent = conn.insert_blocks(sql, cols, blocks(),
                                           settings=settings)
@@ -1421,3 +1473,93 @@ class ClickHouseNativeSink:
         self.write_stats["rows_written"] += rows_acc.value
         self.write_stats["conn_wall_us"] += wall_acc.value
         self.write_stats["epochs"] += 1
+
+    def digest(self, columns, pk_cols, n_buckets, *, final,
+               binary_cols, sample) -> list[dict]:
+        """The server-resident bucket digest (operators/syncverify.py):
+        a bounded ~4-column x n_buckets result, typed ints off the
+        decoder (bucket UInt64, cnt UInt64, xor UInt64, sum UInt256)."""
+        from ..operators import syncverify as sv
+        rows = self._select(sv.clickhouse_digest_sql(
+            self.database, self.table, columns, pk_cols, n_buckets,
+            final=final, binary_cols=binary_cols, sample=sample,
+            fmt=None))         # native results need no FORMAT clause
+        return [{"bucket": int(b), "cnt": int(c),
+                 "xor_fp": int(x), "sum_fp": int(s)}
+                for b, c, x, s in rows]
+
+    def read_back(self, spark, schema: T.StructType, split_expr: str,
+                  n_splits: int, *, split_values=None,
+                  final: bool = False) -> DataFrame:
+        """Read the table back as a DataFrame with `schema`: one Spark
+        task per split id, each opening its own connection and
+        decoding its slice's Data blocks executor-side -- the driver
+        never sees a row, and binary columns round-trip."""
+        head = (f"SELECT {', '.join(f'`{f.name}`' for f in schema.fields)}"
+                f" FROM `{self.database}`.`{self.table}`"
+                f"{' FINAL' if final else ''} WHERE ({split_expr}) = ")
+        names = [f.name for f in schema.fields]
+        coercers = [_native_coercer(f.dataType) for f in schema.fields]
+        connect = self._executor_connect()
+
+        def fetch(batches):
+            import pandas as pd
+            conn = connect()
+            try:
+                for pdf in batches:
+                    for i in pdf["id"]:
+                        _, rows = conn.select_rows(f"{head}{int(i)}")
+                        data = {n: [c(r[j]) for r in rows] for j, (n, c)
+                                in enumerate(zip(names, coercers))}
+                        yield pd.DataFrame(data, columns=names,
+                                           dtype=object)
+            finally:
+                conn.close()
+
+        return self._split_ids(spark, n_splits, split_values).mapInPandas(
+            fetch, schema=schema)
+
+    def execute_repairs(self, stmts: list[dict], columns,
+                        spark_schema) -> None:
+        """ONE connection for the whole repair plan: ALTER DELETEs
+        execute as text; all re-INSERTs ship together as ONE native
+        block (inline JSONEachRow data after FORMAT is an HTTP-body
+        feature the native protocol doesn't accept) -- each row's JSON
+        payload re-types through the Spark schema the diff was built
+        from. Every diff row carries the full common column set, so a
+        single block covers them all."""
+        inserts: list[dict] = []
+        others: list[str] = []
+        for stmt in stmts:
+            statement = stmt.get("statement")
+            if not statement:
+                continue
+            if statement.startswith("INSERT"):
+                inserts.append(json.loads(
+                    statement.split("FORMAT JSONEachRow ", 1)[1]))
+            else:
+                # ALTER DELETE / OPTIMIZE ... FINAL: plain text, in
+                # plan order (repair_statements puts the OPTIMIZE
+                # last so the collapse sees every repaired row)
+                others.append(statement)
+        if not inserts and not others:
+            return
+        by_name = {f.name: f.dataType for f in spark_schema.fields}
+        conn = self._connect()
+        try:
+            if inserts:
+                cols = [(n, t) for n, t in columns
+                        if n in inserts[0]]
+                coercers = [_json_coercer(by_name[n])
+                            for n, _ in cols]
+                rows = [tuple(c(r.get(n)) for c, (n, _t)
+                              in zip(coercers, cols))
+                        for r in inserts]
+                names = ", ".join(f"`{n}`" for n, _ in cols)
+                conn.insert_blocks(
+                    f"INSERT INTO `{self.database}`.`{self.table}` "
+                    f"({names}) VALUES", cols, [rows])
+            for statement in others:
+                conn.execute(statement)
+        finally:
+            conn.close()

@@ -406,9 +406,9 @@ def test_repair_escapes_string_pks():
 
 class _MiniClickHouse:
     """A fake that EVALUATES read-back queries over a Python row
-    store: hash-split SELECTs serve JSONEachRow slices computed with
-    the same public cityHash64 semantics the emitted SQL asks a real
-    server for."""
+    store: bucket-split SELECTs serve JSONEachRow slices computed with
+    the same public cityHash64-over-canonical-pk semantics
+    `syncverify.clickhouse_bucket_sql` asks a real server for."""
 
     def __init__(self, rows: list[dict], pk: str, n_splits: int):
         self.rows, self.pk, self.n = rows, pk, n_splits
@@ -444,7 +444,7 @@ class _MiniClickHouse:
         i = int(m.group(1))
         out = []
         for r in self.rows:
-            h = cityhash64(str(r[self.pk]).encode()) % self.n
+            h = cityhash64(_mini_ch_canon([r[self.pk]])) % self.n
             if h == i:
                 out.append(json.dumps(r))
         return ("\n".join(out) + "\n").encode() if out else b""
@@ -457,10 +457,8 @@ class _MiniClickHouse:
 def test_read_clickhouse_http_distributed_slices(spark):
     from pyspark.sql import types as T
 
-    from mysql_syncer_clickhouse_spark.sinks.clickhouse_read import (
-        hash_split_sql,
-        read_clickhouse_http,
-    )
+    from mysql_syncer_clickhouse_spark.sinks.clickhouse import (
+        ClickHouseHTTPSink)
     rows = [{"id": i, "name": f"n{i}", "qty": i * 2} for i in range(200)]
     srv = _MiniClickHouse(rows, "id", 4)
     try:
@@ -468,9 +466,10 @@ def test_read_clickhouse_http_distributed_slices(spark):
             T.StructField("id", T.LongType()),
             T.StructField("name", T.StringType()),
             T.StructField("qty", T.LongType())])
-        df = read_clickhouse_http(
-            spark, srv.url, "olap", "t", schema,
-            split_expr=hash_split_sql(["id"], 4), n_splits=4)
+        df = ClickHouseHTTPSink(srv.url, "olap", "t").read_back(
+            spark, schema,
+            split_expr=sv.clickhouse_bucket_sql([("id", "Int64")], 4),
+            n_splits=4)
         got = sorted((r["id"], r["name"], r["qty"]) for r in df.collect())
         assert got == [(i, f"n{i}", i * 2) for i in range(200)]
         # one query per split, each a slice predicate
@@ -488,10 +487,8 @@ def test_read_back_then_verify_roundtrip(spark):
     read back distributed, verified against the source frame."""
     from pyspark.sql import types as T
 
-    from mysql_syncer_clickhouse_spark.sinks.clickhouse_read import (
-        hash_split_sql,
-        read_clickhouse_http,
-    )
+    from mysql_syncer_clickhouse_spark.sinks.clickhouse import (
+        ClickHouseHTTPSink)
     src = spark.createDataFrame(
         [(i, f"n{i}") for i in range(100)], "id long, name string")
     # sink drifted: row 5 missing, row 9 changed
@@ -502,9 +499,10 @@ def test_read_back_then_verify_roundtrip(spark):
         schema = T.StructType([
             T.StructField("id", T.LongType()),
             T.StructField("name", T.StringType())])
-        dst = read_clickhouse_http(
-            spark, srv.url, "olap", "t", schema,
-            split_expr=hash_split_sql(["id"], 3), n_splits=3)
+        dst = ClickHouseHTTPSink(srv.url, "olap", "t").read_back(
+            spark, schema,
+            split_expr=sv.clickhouse_bucket_sql([("id", "Int64")], 3),
+            n_splits=3)
         report, diff = sv.sync_verify(src, dst, ["id"], n_buckets=16)
         assert not report["in_sync"]
         got = {(r["id"], r["status"]) for r in diff.collect()}
@@ -877,9 +875,7 @@ def test_cli_checksum_verifies_file_sinks(spark, tmp_path):
     the user-facing state contract -- latest per pk, tombstones
     dropped, `op` excluded so the verdict holds before AND after
     compact(). Drain -> in_sync; planted divergence -> named
-    findings; a missing sink dir -> per-rule error with remedy.
-    (r13 refused outright here; the refusal now lives in
-    transport_for(required=True) for library callers.)"""
+    findings; a missing sink dir -> per-rule error with remedy."""
     from mysql_syncer_clickhouse_spark.__main__ import run, run_checksum
     changelog = _write_items_changelog(spark, tmp_path)
     cfg = _checksum_cfg(tmp_path, None)

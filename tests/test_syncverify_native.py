@@ -367,31 +367,76 @@ def test_select_rows_decodes_typed_blocks(compression):
 
 
 def test_transport_selection():
-    from mysql_syncer_clickhouse_spark.sinks.verify_transport import (
-        HTTPVerifyTransport,
-        NativeVerifyTransport,
-        transport_for,
-    )
+    from mysql_syncer_clickhouse_spark.__main__ import _build_ch_sink
+    from mysql_syncer_clickhouse_spark.sinks.clickhouse import (
+        ClickHouseHTTPSink)
 
     class Cfg:
         sink_addr = "127.0.0.1:9000"
         sink_user = sink_pass = None
         sink_secure = False
         sink_ca = None
+        max_open = 0
 
-    t = transport_for(Cfg(), None)("db", "t", ("id",))
-    assert isinstance(t, NativeVerifyTransport)
+    t = _build_ch_sink(Cfg(), "db", "t", [], ("id",))
+    assert isinstance(t, N.ClickHouseNativeSink)
     assert (t.host, t.port) == ("127.0.0.1", 9000)
-    t = transport_for(Cfg(), "http://h:8123")("db", "t", ("id",))
-    assert isinstance(t, HTTPVerifyTransport)
+    t = _build_ch_sink(Cfg(), "db", "t", [], ("id",),
+                       url="http://h:8123")
+    assert isinstance(t, ClickHouseHTTPSink)
     http_cfg = Cfg()
     http_cfg.sink_addr = "https://h:8443"
-    t = transport_for(http_cfg, None)("db", "t", ("id",))
-    assert isinstance(t, HTTPVerifyTransport)
-    none_cfg = Cfg()
-    none_cfg.sink_addr = None
-    with pytest.raises(SystemExit, match="sink_addr"):
-        transport_for(none_cfg, None)
+    t = _build_ch_sink(http_cfg, "db", "t", [], ("id",))
+    assert isinstance(t, ClickHouseHTTPSink)
+
+
+def test_both_wires_expose_one_client_surface():
+    """Each sink class is its wire's one client: every sink call that
+    run_checksum, run_retype, run_apply_ddl and _drain_rule make exists
+    on both classes with the same parameters, and `kind`/`errors` are
+    class attributes, not dataclass fields."""
+    import dataclasses
+    import inspect
+
+    from mysql_syncer_clickhouse_spark.sinks.clickhouse import (
+        ClickHouseHTTPSink)
+
+    classes = (ClickHouseHTTPSink, N.ClickHouseNativeSink)
+    for name in ("ensure_table", "ensure_columns", "apply_batch",
+                 "execute", "describe_columns", "table_engine",
+                 "digest", "read_back", "execute_repairs"):
+        params = {tuple((p.name, p.kind, p.default) for p in
+                        inspect.signature(getattr(cls, name))
+                        .parameters.values())
+                  for cls in classes}
+        assert len(params) == 1, (name, params)
+    assert {cls.kind for cls in classes} == {"http", "native"}
+    for cls in classes:
+        assert all(issubclass(e, BaseException) for e in cls.errors)
+        names = {f.name for f in dataclasses.fields(cls)}
+        assert not names & {"kind", "errors"}, cls
+
+
+def test_sink_addr_maps_to_a_wire_in_one_place():
+    """A sink address becomes a wire in __main__._build_ch_sink alone:
+    the http(s) scheme test occurs once in the package source, and
+    native connections are opened only by the native sink module and
+    its feed-rate bench."""
+    import os
+    import pathlib
+
+    import mysql_syncer_clickhouse_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    texts = {str(p.relative_to(root)): p.read_text()
+             for p in sorted(root.rglob("*.py"))}
+    scheme = '("http://", "https://")'
+    assert [(f, t.count(scheme)) for f, t in texts.items()
+            if scheme in t] == [("__main__.py", 1)]
+    assert sorted(f for f, t in texts.items()
+                  if "NativeConnection(" in t) == [
+        os.path.join("sinks", "clickhouse_native.py"),
+        os.path.join("sinks", "native_bench.py")]
 
 
 def _write_items_changelog(spark, tmp_path):
@@ -427,6 +472,34 @@ def test_cli_checksum_native_in_sync(spark, tmp_path):
         assert line["rows_src"] == 2 and line["rows_sink"] == 2
         assert out[-1]["out_of_sync"] == []
         assert all("FORMAT" not in q for q in srv.queries)
+    finally:
+        srv.stop()
+
+
+@pytest.mark.parametrize("wire", ["http", "native"])
+def test_cli_checksum_sink_table_not_found(spark, tmp_path, wire):
+    """A sink that lacks the rule's table: system.columns answers no
+    rows on either wire, so the rule's line says the table is missing,
+    the run still finishes, and the summary counts the rule out of
+    sync."""
+    from mysql_syncer_clickhouse_spark.__main__ import run_checksum
+    from tests.test_syncverify import _MiniClickHouse
+    changelog = _write_items_changelog(spark, tmp_path)
+    if wire == "http":
+        srv = _MiniClickHouse([], "id", 16)
+        addr = srv.url
+    else:
+        srv = _MiniNativeCH([], [], ["id"], 16)
+        addr = srv.addr
+    try:
+        out = run_checksum(_cfg(tmp_path, addr),
+                           changelog_dir=changelog, buckets=16,
+                           spark=spark)
+        line = next(x for x in out if x.get("rule") == "app:items")
+        assert line["transport"] == wire
+        assert line["error"].startswith("sink table not found")
+        assert out[-1]["mode"] == "checksum"
+        assert out[-1]["out_of_sync"] == ["app:items"]
     finally:
         srv.stop()
 
@@ -577,8 +650,6 @@ def test_native_array_column_decodes_and_reads_back(spark):
 
     from pyspark.sql import types as T
 
-    from mysql_syncer_clickhouse_spark.sinks.clickhouse_read import (
-        read_clickhouse_native)
 
     # test-side Array(Int64) encode: cumulative UInt64 offsets + flat
     def enc_array_i64(arrs):
@@ -617,8 +688,9 @@ def test_native_array_column_decodes_and_reads_back(spark):
         schema = T.StructType([
             T.StructField("id", T.LongType()),
             T.StructField("tags", T.ArrayType(T.LongType()))])
-        df = read_clickhouse_native(
-            spark, srv.host, srv.port, "olap", "t", schema,
+        sink = N.ClickHouseNativeSink(srv.host, srv.port, "olap", "t")
+        df = sink.read_back(
+            spark, schema,
             split_expr="cityHash64(toString(`id`)) % 1", n_splits=1)
         rows = sorted((r["id"], list(r["tags"])) for r in df.collect())
         assert rows == [(1, [1, 2, 3]), (2, []), (3, [42])]
@@ -638,7 +710,7 @@ def test_json_coercer_round_trips_spark_to_json(spark):
 
     from pyspark.sql import functions as F
 
-    from mysql_syncer_clickhouse_spark.sinks.verify_transport import (
+    from mysql_syncer_clickhouse_spark.sinks.clickhouse_native import (
         _json_coercer)
 
     rows = [(1, datetime.date(2024, 1, 2),
@@ -672,10 +744,10 @@ def test_json_coercer_round_trips_spark_to_json(spark):
 
 def test_cli_retype_over_native_sink(spark, tmp_path):
     """--retype against a native-TCP sink_addr: the introspection
-    rides the zero-row INSERT header (the same header adoption the
-    write path uses -- no SELECT decoding needed there), and the
-    MODIFY executes over the native wire. The HTTP twin lives in
-    test_cli.py; this pins the native leg the CLI documents."""
+    is the same system.columns SELECT the HTTP sink sends, decoded
+    from native Data blocks, and the MODIFY executes over the native
+    wire. The HTTP twin lives in test_cli.py; this pins the native
+    leg the CLI documents."""
     import os
 
     from mysql_syncer_clickhouse_spark.__main__ import run_retype
